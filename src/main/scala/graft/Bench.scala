@@ -18,8 +18,10 @@ import org.apache.spark.sql.SparkSession
   * exactly those queries. The JSON line on stdout is the contract.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The benched session: `local[SPARK_GRAFT_CPUS]` (default 4) with the
+    * graft extensions. [[Explain]] prints plans from this same session.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -40,6 +42,12 @@ object Bench {
     // round 11 lost BENCH_r11.json's per-query tail to it. The bench's
     // own diagnostics go through System.err explicitly.
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Untimed warm-up: touch every table once so footer reads, codegen
     // and JIT are out of the per-query timings (the first timed query
     // otherwise absorbs multiple seconds of session bring-up).

@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: print formatted plans for selected queries. */
+/** Dev tool: print formatted plans for selected queries, from the
+  * session [[Bench]] times (set SPARK_GRAFT_CPUS as for the bench).
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     args.tail.foreach { q =>
       println(s"########## $q")

@@ -255,39 +255,18 @@ object Classifier {
       m.corpusRows + newRows, math.max(m.corpusMaxId, newMax)))
   }
 
-  /** Idempotent classifier maintenance (d76) — the e34/e43 sync policy
-    * for the classifier family, one operator instead of a README
-    * procedure: artifact fresh → no-op; corpus grown append-only →
+  /** Idempotent classifier maintenance (d76): the shared
+    * [[graft.sources.IndexManifest.sync]] policy, whose append arm is
     * [[updateClassifier]] on the new docs alone (the online-learning
-    * path); anything else (missing, shrunk, rewritten history, param
-    * mismatch) → full [[saveClassifier]] retrain. Returns the action
-    * taken ("fresh" | "update" | "rebuild").
+    * path) and is reported as "update" ("fresh" | "update" | "rebuild").
     */
   def classifierSync(docs: DataFrame, labelPred: Column, path: String,
-      nBuckets: Int = 64, passes: Int = 3, updatePasses: Int = 1): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = try Some(IndexManifest.require(path, "perceptron",
-      Map("n_buckets" -> nBuckets.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = docs.agg(count(lit(1)), max(col("doc_id").cast("long")),
-          sum(when(col("doc_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          updateClassifier(docs.filter(col("doc_id") > m.corpusMaxId),
-            labelPred, path, updatePasses)
-          "update"
-        } else {
-          saveClassifier(docs, labelPred, path, nBuckets, passes)
-          "rebuild"
-        }
-      case None =>
-        saveClassifier(docs, labelPred, path, nBuckets, passes)
-        "rebuild"
+      nBuckets: Int = 64, passes: Int = 3, updatePasses: Int = 1): String =
+    graft.sources.IndexManifest.sync(docs, "doc_id", path, "perceptron",
+      Map("n_buckets" -> nBuckets.toLong))(
+      updateClassifier(_, labelPred, path, updatePasses))(
+      saveClassifier(docs, labelPred, path, nBuckets, passes)) match {
+      case "append" => "update"
+      case action => action
     }
-  }
 }

@@ -1381,24 +1381,16 @@ object Dedup {
     */
   def appendGramIndex(increment: DataFrame, path: String,
       minLen: Int = 8): Unit = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = IndexManifest.require(path, "gram",
-      Map("min_len" -> minLen.toLong))
-    val stats = increment.agg(count(lit(1)),
-      min(col("doc_id").cast("long")), max(col("doc_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    import graft.sources.IndexManifest
+    val inc = IndexManifest.beginAppend(increment, "doc_id",
+      IndexManifest.require(path, "gram", Map("min_len" -> minLen.toLong)), path)
+    if (inc.isEmpty) return
     IndexManifest.requireNoOrphans(
-      increment.sparkSession.read.parquet(s"$path/grams"), "wm", man, path)
+      increment.sparkSession.read.parquet(s"$path/grams"), "wm", inc.man, path)
     positionalGrams(increment, minLen).select(col("hs")).distinct()
-      .withColumn("wm", lit(maxId))
+      .withColumn("wm", lit(inc.maxId))
       .write.mode("append").parquet(s"$path/grams")
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
   /** Incremental ExactSubstr against a PERSISTED gram index (d44) —
@@ -2010,22 +2002,17 @@ object Dedup {
     * EXACTLY: the appended index's sig/bands tables are row-identical
     * to a fresh [[saveLshIndex]] on the grown corpus (the e42-strength
     * claim, spec-pinned; registered against d77's oracle verbatim).
-    * History files stay byte-frozen; appends must be id-monotone so the
-    * manifest watermark remains a valid prefix witness.
+    * History files stay byte-frozen; the increment passes the shared
+    * prelude ([[graft.sources.IndexManifest.beginAppend]]).
     */
   def appendLshIndex(newDocs: DataFrame, path: String): Unit = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = IndexManifest.require(path, "lsh")
+    import graft.sources.IndexManifest
+    val inc = IndexManifest.beginAppend(newDocs, "doc_id",
+      IndexManifest.require(path, "lsh"), path)
+    if (inc.isEmpty) return
+    val man = inc.man
     val k = man.params("k").toInt
     val bands = man.params("bands").toInt
-    val stats = newDocs.agg(count(lit(1)),
-      min(col("doc_id").cast("long")), max(col("doc_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
     // orphan guard: a prior append that crashed before its manifest flip
     // left sig rows above the watermark; appending again would duplicate.
     // Overlapped with the increment's signature materialization — the
@@ -2051,8 +2038,7 @@ object Dedup {
       () => bandRows(sig, k, bands).write.mode("append")
         .parquet(s"$path/bands")))
     // every append is a new snapshot version (the d153 device)
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
   /** Fuzzy-dedup an increment against a persisted LSH index (d77) —
@@ -2156,35 +2142,12 @@ object Dedup {
   }
 
   /** SYNC a persisted LSH index to the current corpus (d79) — the
-    * e34/e43 maintenance policy for the dedup-index family: FRESH
-    * (watermark matches) touches nothing; MONOTONE GROWTH (history
-    * prefix intact, new ids above the watermark) appends just the
-    * delta ([[appendLshIndex]] — exact, since nothing is trained);
-    * anything else rebuilds. Idempotent: a second sync on the same
-    * corpus is always "fresh". Returns the action taken.
+    * shared [[graft.sources.IndexManifest.sync]] policy; the append arm
+    * ([[appendLshIndex]]) is exact, since nothing is trained.
     */
   def lshIndexSync(docs: DataFrame, path: String, k: Int = 64,
-      bands: Int = 16): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = try Some(IndexManifest.require(path, "lsh",
-      Map("k" -> k.toLong, "bands" -> bands.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = docs.agg(count(lit(1)), max(col("doc_id").cast("long")),
-          sum(when(col("doc_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          // orphan residue from a crashed append → rebuild, the
-          // documented recovery for the append-vs-manifest crash window
-          try { appendLshIndex(docs.filter(col("doc_id") > m.corpusMaxId), path); "append" }
-          catch { case _: IndexManifestException =>
-            saveLshIndex(docs, path, k, bands); "rebuild" }
-        } else { saveLshIndex(docs, path, k, bands); "rebuild" }
-      case None => saveLshIndex(docs, path, k, bands); "rebuild"
-    }
-  }
+      bands: Int = 16): String =
+    graft.sources.IndexManifest.sync(docs, "doc_id", path, "lsh",
+      Map("k" -> k.toLong, "bands" -> bands.toLong))(
+      appendLshIndex(_, path))(saveLshIndex(docs, path, k, bands))
 }

@@ -242,23 +242,16 @@ object Multimodal {
     * block files stay byte-frozen; append ≡ rebuild exactly.
     */
   def appendPhashIndex(newMedia: DataFrame, path: String): Unit = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = IndexManifest.require(path, "phash")
-    val stats = newMedia.agg(count(lit(1)),
-      min(col("doc_id").cast("long")), max(col("doc_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    import graft.sources.IndexManifest
+    val inc = IndexManifest.beginAppend(newMedia, "doc_id",
+      IndexManifest.require(path, "phash"), path)
+    if (inc.isEmpty) return
     IndexManifest.requireNoOrphans(
-      newMedia.sparkSession.read.parquet(s"$path/blocks"), "doc_id", man, path)
-    phashBlocks(newMedia, man.params("radius").toInt).write.mode("append")
+      newMedia.sparkSession.read.parquet(s"$path/blocks"), "doc_id", inc.man, path)
+    phashBlocks(newMedia, inc.man.params("radius").toInt).write.mode("append")
       .parquet(s"$path/blocks")
     // every append is a new snapshot version (the d153 device)
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
   /** Probe a persisted phash index with an increment (m08) — per
@@ -308,31 +301,14 @@ object Multimodal {
         col("best_hamming").isNotNull.as("is_dup"))
   }
 
-  /** The e34/d79 maintenance policy for the phash index (m08):
-    * fresh / append / rebuild, idempotent; returns the action taken.
+  /** Maintenance for the phash index (m08): the shared
+    * [[graft.sources.IndexManifest.sync]] policy.
     */
   def phashIndexSync(media: DataFrame, path: String,
-      radius: Int = 3): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = try Some(IndexManifest.require(path, "phash",
-      Map("radius" -> radius.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = media.agg(count(lit(1)), max(col("doc_id").cast("long")),
-          sum(when(col("doc_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          try { appendPhashIndex(media.filter(col("doc_id") > m.corpusMaxId), path); "append" }
-          catch { case _: IndexManifestException =>
-            savePhashIndex(media, path, radius); "rebuild" }
-        } else { savePhashIndex(media, path, radius); "rebuild" }
-      case None => savePhashIndex(media, path, radius); "rebuild"
-    }
-  }
+      radius: Int = 3): String =
+    graft.sources.IndexManifest.sync(media, "doc_id", path, "phash",
+      Map("radius" -> radius.toLong))(
+      appendPhashIndex(_, path))(savePhashIndex(media, path, radius))
 
   /** Caption-media alignment filter (m10) — the CLIP-score filtering
     * shape (LAION-style curation: embed the image, embed the caption,

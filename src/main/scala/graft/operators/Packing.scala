@@ -430,8 +430,9 @@ object Packing {
       docs.join(keepIds.select(col("doc_id")), Seq("doc_id"), "left_semi"),
       path, budget, bucketBits)
 
-  /** Maintenance policy for a CURATED shard store (d91) — the e34/d79
-    * fresh/append/rebuild sync with one crucial difference: a curated
+  /** Maintenance policy for a CURATED shard store (d91) — the
+    * [[graft.sources.IndexManifest.sync]] policy with one crucial
+    * difference, so it keeps its own decision: a curated
     * store's membership is NOT append-only by construction. The corpus
     * grows id-monotonically, but the SELECTION over it is corpus-global
     * (classifier ranks, perplexity terciles), so a new corpus version
@@ -509,9 +510,8 @@ object Packing {
     * history chain frozen, increment chain offset by the history total.
     *
     * Requirements (loud, named errors): the store must be a manifested
-    * "shards" index, and the increment's ids must be strictly above the
-    * manifest watermark (the append-only corpus contract that makes the
-    * (rows, maxId) freshness pair sufficient).
+    * "shards" index with the append params, and the increment passes the
+    * shared prelude ([[graft.sources.IndexManifest.beginAppend]]).
     */
   def appendTokenShards(newDocs: DataFrame, path: String,
       extraParams: Map[String, Long] = Map.empty): Unit = {
@@ -523,11 +523,8 @@ object Packing {
     val base = m.params.getOrElse("n_tokens_total",
       throw new IndexManifestException(
         s"shards index at $path predates incremental append (no 'n_tokens_total') — rebuild once"))
-    val head = newDocs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val (rows, minId, maxId) =
-      (head.getLong(0), if (head.isNullAt(1)) Long.MaxValue else head.getLong(1),
-        if (head.isNullAt(2)) -1L else head.getLong(2))
-    if (rows == 0L) return // empty increment: the no-op append
+    val inc = IndexManifest.beginAppend(newDocs, "doc_id", m, path)
+    if (inc.isEmpty) return
     // appending to an EMPTY store ≡ a fresh build (the frozen stream has
     // zero length), and must BE one: the empty store's schema-only file
     // sits unpartitioned, so a partitioned append would leave a mixed
@@ -540,10 +537,6 @@ object Packing {
       }
       return
     }
-    if (minId <= m.corpusMaxId)
-      throw new IndexManifestException(
-        s"append increment min doc_id $minId is not above the store watermark " +
-          s"${m.corpusMaxId} — increments must be id-monotone (rebuild for rewrites)")
     IndexManifest.requireNoOrphans(
       newDocs.sparkSession.read.parquet(s"$path/shards"), "doc_id", m, path)
     // increment-local prefix sum in the same deterministic order, then
@@ -565,9 +558,8 @@ object Packing {
     // below N's watermark. extraParams ride the SAME manifest flip
     // (e.g. the streaming gate's last_batch_id — the atomicity is what
     // makes its replay-skip check trustworthy).
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest("shards",
-      m.params ++ extraParams + ("n_tokens_total" -> (base + incr)),
-      m.corpusRows + rows, maxId))
+    IndexManifest.writeVersioned(path, inc.advanced.copy(
+      params = m.params ++ extraParams + ("n_tokens_total" -> (base + incr))))
   }
 
   /** Read ONE shard from a [[saveTokenShards]] store — manifest-gated,

@@ -1627,24 +1627,16 @@ object Similarity {
     * codes are never read, let alone recomputed — the d43/d44 increment
     * algebra applied to vectors, and the missing half of
     * build-once/query-many: without it every corpus publish forces a
-    * full re-encode. The increment's ids must sit strictly ABOVE the
-    * manifest watermark (the id-monotone append contract that makes the
-    * (rows, maxId) watermark arithmetic exact); an overlapping
-    * increment is a named error, not a silent double-insert. The append
-    * honors the index's recorded layout — a cell-partitioned index
-    * gains files inside existing cell directories, so pruned probes
-    * keep pruning.
+    * full re-encode. The increment passes the shared prelude
+    * ([[IndexManifest.beginAppend]]). The append honors the index's
+    * recorded layout — a cell-partitioned index gains files inside
+    * existing cell directories, so pruned probes keep pruning.
     */
   def appendIvfSq8Index(increment: DataFrame, path: String): Unit = {
-    val man = IndexManifest.require(path, "ivf-sq8")
-    val stats = increment.agg(count(lit(1)),
-      min(col("vec_id").cast("long")), max(col("vec_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    val inc = IndexManifest.beginAppend(increment, "vec_id",
+      IndexManifest.require(path, "ivf-sq8"), path)
+    if (inc.isEmpty) return
+    val man = inc.man
     // codebook reload and the orphan guard are independent store READS
     // — overlapped; both complete before the data write below can start
     // (awaitAll doc), so the guard still strictly precedes the mutation
@@ -1670,61 +1662,25 @@ object Similarity {
       else codes
     val w = laid.write.mode("append")
     (if (byCell) w.partitionBy("cell") else w).parquet(s"$path/codes")
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
-  /** SYNC a persisted IVF+SQ8 index to the current corpus (e34) — the
-    * maintenance policy the manifest machinery exists to drive, as one
-    * operator: FRESH (watermark matches) serves as-is and touches
-    * nothing; MONOTONE GROWTH (history prefix intact — verified with
-    * one filtered count against the manifest watermark — plus new ids
-    * above it) appends just the delta with the frozen codebook
-    * ([[appendIvfSq8Index]]); anything else (shrunk, rewritten, params
-    * drift, missing/foreign manifest) falls back to a full rebuild.
-    * Idempotent by construction — a second sync against the same
-    * corpus is always the FRESH no-op — so callers run it
-    * unconditionally per corpus publish instead of choosing
-    * build-vs-append by hand. Returns the action taken ("fresh" |
-    * "append" | "rebuild"), pinned by spec.
+  /** SYNC a persisted IVF+SQ8 index to the current corpus (e34): the
+    * shared [[IndexManifest.sync]] policy. The append arm
+    * ([[appendIvfSq8Index]]) encodes the delta with the frozen codebook.
     */
   def ivfSq8IndexSync(emb: DataFrame, path: String, nCells: Int = 16,
-      partitionByCell: Boolean = false): String = {
+      partitionByCell: Boolean = false): String =
     // train_iters pinned to 0: this sync is the SEED-centroid policy;
     // a trained store (e77) must not silently pass as fresh under it —
     // param drift falls through to the rebuild arm, the documented
     // contract (a pre-round-13 store without the param also rebuilds
     // once, gaining it)
-    val man = try Some(IndexManifest.require(path, "ivf-sq8",
+    IndexManifest.sync(emb, "vec_id", path, "ivf-sq8",
       Map("cells" -> nCells.toLong,
         "partition_by_cell" -> (if (partitionByCell) 1L else 0L),
-        "train_iters" -> 0L)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = emb.agg(count(lit(1)), max(col("vec_id").cast("long")),
-          sum(when(col("vec_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          try {
-            appendIvfSq8Index(emb.filter(col("vec_id") > m.corpusMaxId), path)
-            "append"
-          } catch { case _: IndexManifestException =>
-            saveIvfSq8Index(emb, path, nCells, partitionByCell)
-            "rebuild"
-          }
-        } else {
-          saveIvfSq8Index(emb, path, nCells, partitionByCell)
-          "rebuild"
-        }
-      case None =>
-        saveIvfSq8Index(emb, path, nCells, partitionByCell)
-        "rebuild"
-    }
-  }
+        "train_iters" -> 0L))(appendIvfSq8Index(_, path))(
+      saveIvfSq8Index(emb, path, nCells, partitionByCell))
 
   /** QUERY a persisted IVF+SQ8 index (e31) — the query-many half:
     * probe cells and quantizer constants load as driver literals
@@ -2334,24 +2290,19 @@ object Similarity {
       rows, maxId))
   }
 
-  /** APPEND to a persisted SRP index (e42) — the id-monotone increment
-    * contract of [[appendIvfSq8Index]], with a stronger guarantee: the
-    * sign matrix is parameter-derived, so the appended index is
-    * bit-identical to a fresh build on the grown corpus (spec-pinned),
-    * not merely frozen-book-consistent. History block files are never
-    * read or rewritten; new files land inside existing (bpos, bval)
-    * directories so pruned probes keep pruning.
+  /** APPEND to a persisted SRP index (e42) — the shared prelude
+    * ([[IndexManifest.beginAppend]]), with a stronger guarantee than
+    * [[appendIvfSq8Index]]'s: the sign matrix is parameter-derived, so
+    * the appended index is bit-identical to a fresh build on the grown
+    * corpus (spec-pinned), not merely frozen-book-consistent. History
+    * block files are never read or rewritten; new files land inside
+    * existing (bpos, bval) directories so pruned probes keep pruning.
     */
   def appendSrpIndex(increment: DataFrame, path: String): Unit = {
-    val man = IndexManifest.require(path, "srp")
-    val stats = increment.agg(count(lit(1)),
-      min(col("vec_id").cast("long")), max(col("vec_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    val inc = IndexManifest.beginAppend(increment, "vec_id",
+      IndexManifest.require(path, "srp"), path)
+    if (inc.isEmpty) return
+    val man = inc.man
     IndexManifest.requireNoOrphans(
       increment.sparkSession.read.parquet(s"$path/blocks"), "vec_id", man, path)
     val (outDims, radius) =
@@ -2363,50 +2314,19 @@ object Similarity {
         Seq(col("bpos"), col("bval")))
       .write.mode("append").partitionBy("bpos", "bval")
       .parquet(s"$path/blocks")
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
-  /** SYNC a persisted SRP index to the current corpus (e43) — the e34
-    * maintenance policy applied to the SRP family, completing the
-    * symmetry: FRESH serves as-is; MONOTONE GROWTH (history prefix
-    * intact, new ids above the watermark) appends the delta
-    * ([[appendSrpIndex]] — here exactly equal to a rebuild, so the
-    * policy's append arm loses nothing); anything else rebuilds.
-    * Idempotent: a second sync against the same corpus is the FRESH
-    * no-op. Returns the action taken ("fresh" | "append" | "rebuild"),
-    * pinned by spec.
+  /** SYNC a persisted SRP index to the current corpus (e43): the
+    * shared [[IndexManifest.sync]] policy. The append arm
+    * ([[appendSrpIndex]]) is exactly equal to a rebuild, so the policy's
+    * append arm loses nothing.
     */
   def srpIndexSync(emb: DataFrame, path: String, outDims: Int = 16,
-      radius: Int = 3): String = {
-    val man = try Some(IndexManifest.require(path, "srp",
-      Map("out_dims" -> outDims.toLong, "radius" -> radius.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = emb.agg(count(lit(1)), max(col("vec_id").cast("long")),
-          sum(when(col("vec_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          try {
-            appendSrpIndex(emb.filter(col("vec_id") > m.corpusMaxId), path)
-            "append"
-          } catch { case _: IndexManifestException =>
-            saveSrpIndex(emb, path, outDims, radius)
-            "rebuild"
-          }
-        } else {
-          saveSrpIndex(emb, path, outDims, radius)
-          "rebuild"
-        }
-      case None =>
-        saveSrpIndex(emb, path, outDims, radius)
-        "rebuild"
-    }
-  }
+      radius: Int = 3): String =
+    IndexManifest.sync(emb, "vec_id", path, "srp",
+      Map("out_dims" -> outDims.toLong, "radius" -> radius.toLong))(
+      appendSrpIndex(_, path))(saveSrpIndex(emb, path, outDims, radius))
 
   /** QUERY a persisted SRP index — bit-identical to [[srpBucketTopK]]
     * on the index's corpus (spec-asserted): same projection, same
@@ -3417,24 +3337,26 @@ object Similarity {
     * this is the difference between a daily model refresh priced at the
     * increment and a daily corpus scan.
     *
-    * Guards: id-monotone increment vs the manifest watermark (the
-    * contract that makes (rows, maxId) freshness arithmetic exact); the
-    * stats tables are REWRITTEN per append (they are aggregates, not
-    * row logs — dims² rows, trivially cheap), so this store records no
+    * Guards: the shared prelude ([[IndexManifest.beginAppend]]) and the
+    * nrow witness below; the stats tables are REWRITTEN per append
+    * (they are aggregates, not row logs — dims² rows, trivially
+    * cheap), so this store records no
     * snapshot versions: old model states are not servable and claim
     * nothing (contrast the d153 frozen-file stores).
     */
   def appendSpectralIndex(increment: DataFrame, path: String): Unit = {
     val man = IndexManifest.require(path, "spectral")
-    val spark = increment.sparkSession
-    val stats = increment.agg(count(lit(1)),
-      min(col("vec_id").cast("long")), max(col("vec_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    // a pre-stats artifact cannot merge: named error before any job, so
+    // spectralIndexSync rebuilds it once
+    Seq("nrow", "sx").foreach { t =>
+      if (!new java.io.File(s"$path/$t").exists())
+        throw new IndexManifestException(
+          s"spectral index at $path predates incremental append (no '$t' " +
+            "stats) — rebuild once")
+    }
+    val inc = IndexManifest.beginAppend(increment, "vec_id", man, path)
+    if (inc.isEmpty) return
+    val (rows, spark) = (inc.rows, increment.sparkSession)
     // the orphan guard for an id-less store (writeSpectralTables doc):
     // stats ahead of the manifest = a previous append crashed between
     // the stats write and the manifest flip; merging again would
@@ -3467,7 +3389,7 @@ object Similarity {
     writeSpectralTables(spark, path, man.params("dims").toInt,
       man.params("iters").toInt, mergedSx, mergedSxx,
       Some((incSx, incSxx)),
-      man.corpusRows + rows, man.corpusRows + rows, maxId)
+      man.corpusRows + rows, man.corpusRows + rows, inc.maxId)
   }
 
   /** Load the spectral model AS OF snapshot `version` (e79) — time
@@ -3549,47 +3471,17 @@ object Similarity {
       spark.read.parquet(s"$path/iter"))
   }
 
-  /** SYNC a persisted spectral model to the current corpus — the e34
-    * maintenance policy, with an APPEND arm the family gained in round
-    * 13 (e76): FRESH (watermark matches) serves as-is; MONOTONE GROWTH
-    * (history prefix intact — one filtered count against the manifest
-    * watermark — plus new ids above it) merges the increment's
-    * sufficient statistics ([[appendSpectralIndex]]) at increment cost,
-    * zero corpus rescans, bit-identical to a rebuild; anything else
-    * (shrink, rewrite, param drift, missing/corrupt manifest, or a
-    * pre-stats artifact) retrains from the corpus. Idempotent: a second
-    * sync against the same corpus is the FRESH no-op. Returns the
-    * action ("fresh" | "append" | "rebuild"), spec-pinned.
+  /** SYNC a persisted spectral model to the current corpus: the shared
+    * [[IndexManifest.sync]] policy. The append arm
+    * ([[appendSpectralIndex]]) merges the increment's sufficient
+    * statistics at increment cost, bit-identical to a rebuild; a
+    * pre-stats artifact fails it before any job and retrains.
     */
   def spectralIndexSync(emb: DataFrame, path: String, dim: Int,
-      iters: Int = 3): String = {
-    val man = try Some(IndexManifest.require(path, "spectral",
-      Map("dims" -> dim.toLong, "iters" -> iters.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = emb.agg(count(lit(1)), max(col("vec_id").cast("long")),
-          sum(when(col("vec_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId &&
-            new java.io.File(s"$path/nrow").exists() &&
-            new java.io.File(s"$path/sx").exists()) {
-          try {
-            appendSpectralIndex(emb.filter(col("vec_id") > m.corpusMaxId), path)
-            "append"
-          } catch { case _: IndexManifestException =>
-            saveSpectralIndex(emb, path, dim, iters); "rebuild"
-          }
-        } else {
-          saveSpectralIndex(emb, path, dim, iters); "rebuild"
-        }
-      case None =>
-        saveSpectralIndex(emb, path, dim, iters); "rebuild"
-    }
-  }
+      iters: Int = 3): String =
+    IndexManifest.sync(emb, "vec_id", path, "spectral",
+      Map("dims" -> dim.toLong, "iters" -> iters.toLong))(
+      appendSpectralIndex(_, path))(saveSpectralIndex(emb, path, dim, iters))
 
   /** The spectral model through its persisted-artifact cache (the
     * keepListCached convention): built once per (corpus, params)

@@ -995,8 +995,10 @@ object TextAnalysis {
     */
   def appendCardStore(newDocs: DataFrame, path: String): Unit = {
     import graft.sources.{IndexManifest, IndexManifestException}
-    val m = IndexManifest.read(path)
-    require(m.kind == "card", s"appendCardStore: manifest kind ${m.kind}")
+    val inc = IndexManifest.beginAppend(newDocs, "doc_id",
+      IndexManifest.require(path, "card"), path)
+    if (inc.isEmpty) return
+    val m = inc.man
     val spark = newDocs.sparkSession
     val p = m.params("p").toInt
     val storedMax = spark.read.parquet(s"$path/state")
@@ -1008,11 +1010,6 @@ object TextAnalysis {
           s"(state max_id $storedMax vs manifest ${m.corpusMaxId}) — a " +
           "previous append crashed before its manifest flip; rebuild " +
           "(cardStoreSync) instead of retrying")
-    val minNew = newDocs.agg(min(col("doc_id"))).head().getLong(0)
-    if (minNew <= m.corpusMaxId)
-      throw new IndexManifestException(
-        s"appendCardStore: increment ids from $minNew are not above the " +
-          s"manifest watermark ${m.corpusMaxId}")
     val (incRegs, incState) = cardPieces(newDocs, p)
     val mergedRegs = spark.read.parquet(s"$path/regs")
       .unionByName(incRegs)
@@ -1030,34 +1027,17 @@ object TextAnalysis {
       .localCheckpoint(true)
     mergedRegs.coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
     mergedState.coalesce(1).write.mode("overwrite").parquet(s"$path/state")
-    val (incRows, incMax) = IndexManifest.watermark(newDocs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("card",
-      m.params, m.corpusRows + incRows, math.max(m.corpusMaxId, incMax)))
+    IndexManifest.write(path, inc.advanced)
   }
 
-  /** Fresh/append/rebuild maintenance policy for the card store (the
-    * e34/e43 convention): untouched corpus → "fresh"; grown with a
-    * clean store → fold the increment ("append"); anything else —
-    * including the crashed-append state the append guard names —
-    * rebuild. Returns the action taken.
+  /** Maintenance for the card store: the shared
+    * [[graft.sources.IndexManifest.sync]] policy — including its
+    * history-prefix check, so a corpus that lost rows under the
+    * watermark rebuilds rather than folding onto a stale card.
     */
-  def cardStoreSync(docs: DataFrame, path: String, p: Int = 8): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    def rebuild(): String = { saveCardStore(docs, path, p); "rebuild" }
-    val m =
-      try IndexManifest.read(path)
-      catch { case _: IndexManifestException => return rebuild() }
-    if (m.kind != "card" || m.params.get("p").map(_.toInt) != Some(p))
-      return rebuild()
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-    else if (rows > m.corpusRows && maxId > m.corpusMaxId)
-      try {
-        appendCardStore(docs.filter(col("doc_id") > m.corpusMaxId), path)
-        "append"
-      } catch { case _: IndexManifestException => rebuild() }
-    else rebuild()
-  }
+  def cardStoreSync(docs: DataFrame, path: String, p: Int = 8): String =
+    graft.sources.IndexManifest.sync(docs, "doc_id", path, "card",
+      Map("p" -> p.toLong))(appendCardStore(_, path))(saveCardStore(docs, path, p))
 
   /** Serve the d129-shaped card from the STORE — counts exact, the two
     * distinct counts as their HLL estimates (metrics named `_hll` to
@@ -1239,16 +1219,10 @@ object TextAnalysis {
       throw new IndexManifestException(
         s"bm25 index at $path predates incremental append (no 'sum_dl') — rebuild once"))
     val w = split(col("text"), " ")
-    val stats = increment.agg(count(lit(1)),
-      min(col("doc_id").cast("long")), max(col("doc_id").cast("long")),
-      coalesce(sum(size(w)).cast("long"), lit(0L))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId, incSum) =
-      (stats.getLong(0), stats.getLong(1), stats.getLong(2), stats.getLong(3))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    val inc = IndexManifest.beginAppend(increment, "doc_id", man, path,
+      coalesce(sum(size(w)).cast("long"), lit(0L)))
+    if (inc.isEmpty) return
+    val incSum = inc.stats.getLong(3)
     // BOTH tables guarded (the appends below are concurrent, so a crash
     // can commit either first — the old sequential order guaranteed
     // lens ⇒ postings); the guards are pure reads, overlapped
@@ -1279,45 +1253,23 @@ object TextAnalysis {
         .write.mode("append").parquet(s"$path/lens")))
     val spark = increment.sparkSession
     import spark.implicits._
-    Seq((man.corpusRows + rows, baseSum + incSum)).toDF("n_docs", "sum_dl")
+    Seq((inc.advanced.corpusRows, baseSum + incSum)).toDF("n_docs", "sum_dl")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
     IndexManifest.writeVersioned(path,
-      man.copy(params = man.params + ("sum_dl" -> (baseSum + incSum)),
-        corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+      inc.advanced.copy(params = man.params + ("sum_dl" -> (baseSum + incSum))))
   }
 
-  /** The e34/d79 maintenance policy for the BM25 index: FRESH serves
-    * as-is; MONOTONE GROWTH appends ([[appendBm25Index]] — bit-identical
-    * to a rebuild by the exact-merge argument); anything else (shrink,
-    * rewrite, params drift, pre-append artifact, missing manifest)
-    * rebuilds. Idempotent; returns the action taken, spec-pinned.
+  /** Maintenance for the BM25 index: the shared
+    * [[graft.sources.IndexManifest.sync]] policy. The append arm
+    * ([[appendBm25Index]]) is bit-identical to a rebuild by the
+    * exact-merge argument; a pre-append artifact (no `sum_dl`) fails it
+    * before any job, so that store rebuilds once.
     */
   def bm25IndexSync(docs: DataFrame, path: String,
-      termBuckets: Int = 0): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = try Some(IndexManifest.require(path, "bm25",
-      Map("term_buckets" -> termBuckets.toLong)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = docs.agg(count(lit(1)), max(col("doc_id").cast("long")),
-          sum(when(col("doc_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId &&
-            m.params.contains("sum_dl")) {
-          try {
-            appendBm25Index(docs.filter(col("doc_id") > m.corpusMaxId), path)
-            "append"
-          } catch { case _: IndexManifestException =>
-            saveBm25Index(docs, path, termBuckets); "rebuild"
-          }
-        } else { saveBm25Index(docs, path, termBuckets); "rebuild" }
-      case None => saveBm25Index(docs, path, termBuckets); "rebuild"
-    }
-  }
+      termBuckets: Int = 0): String =
+    graft.sources.IndexManifest.sync(docs, "doc_id", path, "bm25",
+      Map("term_buckets" -> termBuckets.toLong))(
+      appendBm25Index(_, path))(saveBm25Index(docs, path, termBuckets))
 
   /** BM25 scoring from a persisted index (d87) — [[bm25]] with text
     * replaced by postings probes: per query term one filtered postings
@@ -2902,24 +2854,16 @@ object TextAnalysis {
     * rebuild-only BY DESIGN — corpus-level dense ranks shift under any
     * append (the d87 idf/avgdl reasoning), and
     * [[suffixIndexCached]]'s staleness check makes that loud. Same
-    * crash-window discipline as every appender: id-monotone guard
-    * against the watermark, orphan check before writing, manifest
-    * flip last.
+    * crash-window discipline as every appender: the shared prelude
+    * ([[graft.sources.IndexManifest.beginAppend]]), orphan check before
+    * writing, manifest flip last.
     */
   def appendSuffixIndex(newDocs: DataFrame, path: String): Unit = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = IndexManifest.require(path, "suffix-array",
-      Map("global" -> 0L))
-    val spark = newDocs.sparkSession
-    val stats = newDocs.agg(count(lit(1)),
-      min(col("doc_id").cast("long")), max(col("doc_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) =
-      (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the index watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    import graft.sources.IndexManifest
+    val inc = IndexManifest.beginAppend(newDocs, "doc_id",
+      IndexManifest.require(path, "suffix-array", Map("global" -> 0L)), path)
+    if (inc.isEmpty) return
+    val (man, spark) = (inc.man, newDocs.sparkSession)
     // BOTH tables guarded (the appends below are concurrent, so a crash
     // can commit either first), overlapped with the increment's ladder
     // — the guards are pure reads and everything completes before any
@@ -2936,40 +2880,16 @@ object TextAnalysis {
       () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
         .write.mode("append").parquet(s"$path/sa"),
       () => perDocLcp(sa, levels).write.mode("append").parquet(s"$path/lcp")))
-    IndexManifest.write(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.write(path, inc.advanced)
   }
 
-  /** Idempotent maintenance for the per-document suffix store (the
-    * e34/d79 policy): "fresh" when the corpus matches the watermark,
-    * "append" when the watermark rows are an exact prefix (recovering
-    * to "rebuild" on the orphan-residue named error), "rebuild"
-    * otherwise (missing/param-mismatched/diverged store).
+  /** Maintenance for the per-document suffix store: the shared
+    * [[graft.sources.IndexManifest.sync]] policy.
     */
-  def suffixIndexSync(docs: DataFrame, path: String): String = {
-    import graft.sources.{IndexManifest, IndexManifestException}
-    val man = try Some(IndexManifest.require(path, "suffix-array",
-      Map("global" -> 0L)))
-    catch { case _: IndexManifestException => None }
-    man match {
-      case Some(m) =>
-        val stats = docs.agg(count(lit(1)), max(col("doc_id").cast("long")),
-          sum(when(col("doc_id") <= m.corpusMaxId, 1L).otherwise(0L))).head()
-        val (rows, maxId) = (stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1))
-        val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-        if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
-        else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId) {
-          try {
-            appendSuffixIndex(docs.filter(col("doc_id") > m.corpusMaxId), path)
-            "append"
-          } catch { case _: IndexManifestException =>
-            saveSuffixIndex(docs, path, global = false); "rebuild"
-          }
-        } else { saveSuffixIndex(docs, path, global = false); "rebuild" }
-      case None => saveSuffixIndex(docs, path, global = false); "rebuild"
-    }
-  }
+  def suffixIndexSync(docs: DataFrame, path: String): String =
+    graft.sources.IndexManifest.sync(docs, "doc_id", path, "suffix-array",
+      Map("global" -> 0L))(appendSuffixIndex(_, path))(
+      saveSuffixIndex(docs, path, global = false))
 
   /** Overlapping token-window chunking (d112) — the retrieval/embedding
     * prep step every RAG or embedding pipeline runs before encoding:

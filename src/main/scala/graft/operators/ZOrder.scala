@@ -78,20 +78,14 @@ object ZOrder {
     * in their buckets with history files byte-frozen and the appended
     * store answers rectangle queries IDENTICALLY to a fresh rebuild on
     * the grown corpus (the e42/d78-strength claim, spec-pinned). Guards
-    * are the shared appender contract: id-monotone vs the watermark,
-    * orphan detection for the crashed-append window.
+    * are the shared prelude ([[IndexManifest.beginAppend]]) and orphan
+    * detection for the crashed-append window.
     */
   def appendZOrderedStore(newEvents: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifestException
-    val man = IndexManifest.require(path, "zorder")
-    val stats = newEvents.agg(count(lit(1)),
-      min(col("event_id").cast("long")), max(col("event_id").cast("long"))).head()
-    if (stats.getLong(0) == 0L) return
-    val (rows, minId, maxId) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (minId <= man.corpusMaxId)
-      throw new IndexManifestException(
-        s"increment ids start at $minId but the store watermark is " +
-          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    val inc = IndexManifest.beginAppend(newEvents, "event_id",
+      IndexManifest.require(path, "zorder"), path)
+    if (inc.isEmpty) return
+    val man = inc.man
     IndexManifest.requireNoOrphans(
       newEvents.sparkSession.read.parquet(s"$path/data"), "event_id", man, path)
     val bits = man.params("bits").toInt
@@ -102,8 +96,7 @@ object ZOrder {
     // every append is a new SNAPSHOT VERSION (IndexManifest.writeVersioned
     // doc): history rows are never rewritten, so a version is exactly
     // its watermark and zRectQueryAt can time-travel with one id cut
-    IndexManifest.writeVersioned(path,
-      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId))
+    IndexManifest.writeVersioned(path, inc.advanced)
   }
 
   /** The z-buckets a query rectangle can touch — pure driver arithmetic

@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Load-time mismatch between an index's manifest and what the caller
@@ -37,6 +37,9 @@ class StaleIndexException(msg: String) extends RuntimeException(msg)
   *     [[StaleIndexException]] on drift. The check is a separate call,
   *     not part of the query path — a production deployment runs it
   *     per corpus publish, not per query.
+  *  3. MAINTENANCE — one fresh/append/rebuild policy over the watermark
+  *     ([[IndexManifest.sync]]) and one append prelude
+  *     ([[IndexManifest.beginAppend]]) serve every append-only store.
   *
   * The watermark pair (rows, maxId) is what the append-only corpus
   * contract makes sufficient: ids are stable and rows are never
@@ -81,7 +84,23 @@ object IndexManifest {
   /** Write `$path/MANIFEST.json` atomically (write-then-rename, same
     * discipline as the segment log's manifest flip).
     */
-  def write(path: String, m: Manifest): Unit = {
+  def write(path: String, m: Manifest): Unit = flip(path, FILE, m)
+
+  /** Read the manifest; a missing or unreadable one is an
+    * [[IndexManifestException]] — an unmanifested index directory is
+    * untrusted by definition.
+    */
+  def read(path: String): Manifest = {
+    if (!Files.exists(Paths.get(path, FILE)))
+      throw new IndexManifestException(
+        s"no $FILE at $path — not a manifested index (rebuilt with a pre-manifest saver?)")
+    parse(path, FILE)
+  }
+
+  /** The one manifest serializer: `m` as JSON, written to `$path/$name`
+    * through a temp file and an atomic rename.
+    */
+  private def flip(path: String, name: String, m: Manifest): Unit = {
     val om = new ObjectMapper()
     val node = om.createObjectNode()
     node.put("kind", m.kind)
@@ -92,32 +111,23 @@ object IndexManifest {
     Files.createDirectories(Paths.get(path))
     val tmp = Files.createTempFile(Paths.get(path), ".manifest-", ".tmp")
     Files.write(tmp, om.writeValueAsBytes(node))
-    Files.move(tmp, Paths.get(path, FILE), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, Paths.get(path, name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Read the manifest; a missing or unreadable one is an
-    * [[IndexManifestException]] — an unmanifested index directory is
-    * untrusted by definition.
+  /** The one manifest parser: any failure to read `$path/$name` as a
+    * manifest (bad JSON, missing field) is an [[IndexManifestException]].
     */
-  def read(path: String): Manifest = {
-    val f = Paths.get(path, FILE)
-    if (!Files.exists(f))
-      throw new IndexManifestException(
-        s"no $FILE at $path — not a manifested index (rebuilt with a pre-manifest saver?)")
-    val node = try new ObjectMapper().readTree(Files.readAllBytes(f))
-    catch { case e: Exception =>
-      throw new IndexManifestException(s"unreadable $FILE at $path: ${e.getMessage}")
+  private def parse(path: String, name: String): Manifest =
+    try {
+      import scala.jdk.CollectionConverters._
+      val node = new ObjectMapper().readTree(Files.readAllBytes(Paths.get(path, name)))
+      val params = Option(node.get("params")).fold(Map.empty[String, Long])(
+        _.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
+      Manifest(node.get("kind").asText(), params,
+        node.get("corpus_rows").asLong(), node.get("corpus_max_id").asLong())
+    } catch { case e: Exception =>
+      throw new IndexManifestException(s"unreadable $name at $path: ${e.getMessage}")
     }
-    val pn = node.get("params")
-    val params = if (pn == null) Map.empty[String, Long] else {
-      val it = pn.fieldNames()
-      Iterator.continually(if (it.hasNext) Some(it.next()) else None)
-        .takeWhile(_.isDefined).flatten
-        .map(k => k -> pn.get(k).asLong()).toMap
-    }
-    Manifest(node.get("kind").asText(), params,
-      node.get("corpus_rows").asLong(), node.get("corpus_max_id").asLong())
-  }
 
   /** Read + verify: the index must be of `kind`, and every entry in
     * `expect` must match the recorded build params exactly. Returns the
@@ -163,6 +173,74 @@ object IndexManifest {
           "write and the manifest flip; rebuild (index sync does this automatically)")
   }
 
+  /** An increment admitted by [[beginAppend]]: the store's manifest,
+    * the increment's row count and max id, and the prelude's agg row
+    * (count, min id, max id, then the caller's extra columns).
+    */
+  case class Increment(man: Manifest, rows: Long, maxId: Long, stats: Row) {
+    def isEmpty: Boolean = rows == 0L
+
+    /** The manifest this append commits: the watermark advanced over
+      * the increment.
+      */
+    def advanced: Manifest =
+      man.copy(corpusRows = man.corpusRows + rows, corpusMaxId = maxId)
+  }
+
+  /** The APPEND PRELUDE every appender shares: one agg over the
+    * increment (count, min and max id, plus `extra` columns the store
+    * folds in the same job), the empty-increment no-op (an empty result
+    * — the caller returns without writing) and the id-monotone guard
+    * against `man`'s watermark — the contract that keeps the
+    * (rows, max id) watermark an exact prefix witness. `man` is the
+    * caller's [[require]] of its kind; store-specific checks that need
+    * no Spark job run between the two calls. Orphan guards and data
+    * writes stay with the store; the manifest flip comes last.
+    */
+  def beginAppend(increment: DataFrame, idCol: String, man: Manifest,
+      path: String, extra: Column*): Increment = {
+    val id = col(idCol).cast("long")
+    val r = increment.agg(count(lit(1)), (min(id) +: max(id) +: extra): _*).head()
+    val inc = Increment(man, r.getLong(0), if (r.isNullAt(2)) -1L else r.getLong(2), r)
+    if (!inc.isEmpty && r.getLong(1) <= man.corpusMaxId)
+      throw new IndexManifestException(
+        s"increment ids start at ${r.getLong(1)} but the index watermark is " +
+          s"${man.corpusMaxId} ($path) — appends must be id-monotone")
+    inc
+  }
+
+  /** The fresh/append/rebuild MAINTENANCE POLICY every watermark-synced
+    * store shares (the e34 convention), as one operator callers run
+    * unconditionally per corpus publish:
+    *  - no manifest of `kind` with build `params` at `path` → rebuild;
+    *  - FRESH: the corpus matches the watermark — nothing is touched;
+    *  - MONOTONE GROWTH: the rows at or below the watermark are exactly
+    *    the recorded prefix and new ids sit above it → `append` the
+    *    delta; an [[IndexManifestException]] from it (orphan residue of
+    *    a crashed append, a pre-append artifact) falls back to rebuild;
+    *  - anything else (shrunk, rewritten history) → rebuild.
+    * One agg (count, max id, prefix count) decides. Idempotent: a second
+    * sync on the same corpus is "fresh". Returns "fresh" | "append" |
+    * "rebuild".
+    */
+  def sync(corpus: DataFrame, idCol: String, path: String, kind: String,
+      params: Map[String, Long])(append: DataFrame => Unit)(
+      rebuild: => Unit): String = {
+    def rebuilt(): String = { rebuild; "rebuild" }
+    val m = try require(path, kind, params)
+      catch { case _: IndexManifestException => return rebuilt() }
+    val stats = corpus.agg(count(lit(1)), max(col(idCol).cast("long")),
+      sum(when(col(idCol) <= m.corpusMaxId, 1L).otherwise(0L))).head()
+    val (rows, maxId) = (stats.getLong(0),
+      if (stats.isNullAt(1)) -1L else stats.getLong(1))
+    val prefixRows = if (stats.isNullAt(2)) 0L else stats.getLong(2)
+    if (rows == m.corpusRows && maxId == m.corpusMaxId) "fresh"
+    else if (prefixRows == m.corpusRows && maxId > m.corpusMaxId)
+      try { append(corpus.filter(col(idCol) > m.corpusMaxId)); "append" }
+      catch { case _: IndexManifestException => rebuilt() }
+    else rebuilt()
+  }
+
   /** VERSIONED write — snapshot history for time-travel reads (the
     * lakehouse capability the append-only contract gives almost for
     * free): the manifest is ALSO written as `MANIFEST.v{N}.json`
@@ -179,18 +257,7 @@ object IndexManifest {
     */
   def writeVersioned(path: String, m: Manifest): Int = {
     val v = versions(path).lastOption.getOrElse(0) + 1
-    val om = new ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("kind", m.kind)
-    node.put("corpus_rows", m.corpusRows)
-    node.put("corpus_max_id", m.corpusMaxId)
-    val p = node.putObject("params")
-    m.params.toSeq.sortBy(_._1).foreach { case (k, vv) => p.put(k, vv) }
-    Files.createDirectories(Paths.get(path))
-    val tmp = Files.createTempFile(Paths.get(path), ".manifest-", ".tmp")
-    Files.write(tmp, om.writeValueAsBytes(node))
-    Files.move(tmp, Paths.get(path, s"MANIFEST.v$v.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    flip(path, s"MANIFEST.v$v.json", m)
     write(path, m)
     v
   }
@@ -257,20 +324,11 @@ object IndexManifest {
     * saver ordering).
     */
   def readVersion(path: String, v: Int): Manifest = {
-    val f = Paths.get(path, s"MANIFEST.v$v.json")
-    if (!Files.exists(f))
+    val name = s"MANIFEST.v$v.json"
+    if (!Files.exists(Paths.get(path, name)))
       throw new IndexManifestException(
         s"no version $v at $path (have: ${versions(path).mkString(", ")})")
-    val node = new ObjectMapper().readTree(Files.readAllBytes(f))
-    val pn = node.get("params")
-    val params = if (pn == null) Map.empty[String, Long] else {
-      val it = pn.fieldNames()
-      Iterator.continually(if (it.hasNext) Some(it.next()) else None)
-        .takeWhile(_.isDefined).flatten
-        .map(k => k -> pn.get(k).asLong()).toMap
-    }
-    val snap = Manifest(node.get("kind").asText(), params,
-      node.get("corpus_rows").asLong(), node.get("corpus_max_id").asLong())
+    val snap = parse(path, name)
     val live = read(path)
     if (snap.kind != live.kind || snap.corpusMaxId > live.corpusMaxId ||
         snap.corpusRows > live.corpusRows)
