@@ -2181,7 +2181,8 @@ object Similarity {
       .agg(min(col("xr")).as("xr"))
     // attach projections ONCE per pair, fold ONCE (same expression as
     // srpBucketTopK); corpus/query payload joins are equi-joins against
-    // the checkpointed narrow frames — AQE broadcasts them at toy SF
+    // the narrow corpus/query frames, shared by shareSmall only under its
+    // size budget (recomputed above it) — AQE broadcasts them at toy SF
     // and degrades to shuffle at scale (the cutSpans reasoning)
     // every arm reads this twice (rank + recall) — shared under the
     // size budget, gated on the scan-rooted emb (shareSmall doc): at

@@ -9,7 +9,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 import java.util.zip.GZIPOutputStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.jdk.CollectionConverters._
@@ -33,20 +33,26 @@ import scala.jdk.CollectionConverters._
   * `counterParity = true` restores exact reference counter semantics
   * without giving the pruning back: a COUNT-ONLY tap query per excluded
   * log (one per side, shared by every connection that needs it) bumps
-  * tcs/tss for connections whose mask skips that log. The tap projects
-  * only the envelope columns the whitelist/attr predicates read — never
-  * the json payload — and runs no emit pass, so its cost is a pruned
-  * scan + one small aggregate per batch; the frame path stays exactly
-  * as pruned as with parity off.
+  * tcs/tss for connections whose mask skips that log. The tap reads
+  * only the envelope columns the whitelist/attr predicates touch —
+  * never the json payload — and runs no emit pass, so its cost is a
+  * pruned scan + one collect of counting-connection tags per batch,
+  * tallied on the driver by the same helper as the feed's counters;
+  * the frame path stays exactly as pruned as with parity off.
   *
-  * Fan-out is a **single pass** per micro-batch regardless of connection
-  * count: every connection's compiled predicate becomes one tag column,
-  * rows explode to (connection, frame) pairs inside Spark, and the
-  * driver only routes already-formatted frames to per-connection queues.
+  * Fan-out is **one Spark job** per micro-batch regardless of connection
+  * count: a single `collect()` returns one row per event that some
+  * connection emits or counts. The row carries the connections that
+  * emit it (boundary ∧ `RedditOps.pred`), those that count it (counter
+  * bound ∧ whitelist ∧ attr), and its SSE frame text, built inside
+  * Spark once per *distinct* `filter=` projection (not once per
+  * connection). The driver bumps tcs/tss from the count tags, sorts the
+  * emitted rows by O1 and offers each frame to its connections' queues.
   * Driver memory is O(micro-batch), not O(backlog × connections): the
   * source's admission control caps each batch at `maxPerTrigger` rows
-  * per log, and the emit pass streams through `toLocalIterator` instead
-  * of materializing every (connection × frame) pair at once.
+  * per log, so the driver holds at most one admitted batch × the
+  * distinct projections in use, plus a 4-byte tag per (row, tagged
+  * connection).
   *
   * Reference semantics kept:
   *  - per-batch emit order = created_utc, rc-before-rs, id (O1);
@@ -389,57 +395,81 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
 
   /** Counter-parity tap batch (`counterParity` class doc): count-only A1
     * pass over the log that `side`-excluding masks never read, bumping
-    * tcs/tss for exactly those connections. Projects only the envelope
-    * columns the predicates touch; no ordering, no frames, no emit.
+    * tcs/tss for exactly those connections. One job: a collect of the
+    * counting-connection tags per passing row (no shuffle, no payload),
+    * tallied by [[bumpCounters]] like the feed's counter half.
     */
   private def handleTapBatch(key: String, side: String, batch: DataFrame,
       batchId: Long): Unit = {
     val snapshot = conns.values.asScala
       .filter(c => !c.closed &&
         (if (side == "rc") !maskReadsRc(c.maskKey) else !maskReadsRs(c.maskKey)))
-      .toSeq
-    // no batch.isEmpty probe: foreachBatch only fires when offsets
-    // advanced, the tap's single aggregate is as cheap as the probe
-    // itself, and the probe would re-scan the unpersisted batch
+      .toIndexedSeq
     if (snapshot.isEmpty) return
-    // replay guard — same contract as handleBatch's counter pass
+    // replay guard — same contract as handleBatch's counter half
     if (batchId <= Option(lastCounted.get(key)).map(_.toLong).getOrElse(-1L)) return
-    val tags = filter(
-      array(snapshot.map { c =>
-        when(col("id") > lit(c.counterBound(side == "rc")) &&
-          RedditOps.whitelistPred(c.spec) && RedditOps.attrPred(c.spec),
-          lit(c.id)).otherwise(lit(null))
-      }: _*),
-      t => t.isNotNull)
-    batch
-      .select(col("event"), col("id"), col("author"), col("subreddit"),
-        col("domain"), col("over_18"), col("is_self"))
-      .select(explode(tags).as("cid"))
-      .groupBy(col("cid")).count()
-      .collect().foreach { r =>
-        Option(conns.get(r.getString(0))).foreach { c =>
-          if (side == "rc") c.tcs.addAndGet(r.getLong(1))
-          else c.tss.addAndGet(r.getLong(1))
-        }
-      }
+    val counted = cidTags(snapshot)(c => col("id") > lit(c.counterBound(side == "rc")) &&
+      RedditOps.whitelistPred(c.spec) && RedditOps.attrPred(c.spec))
+    bumpCounters(snapshot, batch
+      .select(col("event"), counted.as("counted"))
+      .filter(size(col("counted")) > 0)
+      .collect(), 1)
     lastCounted.put(key, batchId)
+  }
+
+  /** The positions in `snapshot` of the connections for which `pred`
+    * holds on a row, as one int array column (no nulls; empty when none
+    * does) — positions, not connection ids, so a collected row carries
+    * 4 bytes per tagged connection.
+    */
+  private def cidTags(snapshot: IndexedSeq[Connection])(pred: Connection => Column): Column =
+    filter(
+      array(snapshot.indices.map(i =>
+        when(pred(snapshot(i)), lit(i)).otherwise(lit(null))): _*),
+      t => t.isNotNull)
+
+  /** A1 counter bump for one event on one connection: rc → tcs, rs →
+    * tss; rr counts toward neither (the keepalive payload stays
+    * {"tcs","tss","tbs"}).
+    */
+  private def bump(c: Connection, event: String, n: Long): Unit = event match {
+    case "rc" => c.tcs.addAndGet(n)
+    case "rs" => c.tss.addAndGet(n)
+    case _    => ()
+  }
+
+  /** The driver-side counter pass shared by the feed and the tap: `rows`
+    * is ONE collected batch with the event in column 0 and, in column
+    * `tagsAt`, the [[cidTags]] positions of the connections that count
+    * it; each connection's counter moves once by its tally.
+    */
+  private def bumpCounters(snapshot: IndexedSeq[Connection],
+      rows: Array[Row], tagsAt: Int): Unit = {
+    val tally = scala.collection.mutable.HashMap.empty[(Int, String), Long]
+    rows.foreach { r =>
+      val event = r.getString(0)
+      r.getSeq[Int](tagsAt).foreach(i =>
+        tally((i, event)) = tally.getOrElse((i, event), 0L) + 1L)
+    }
+    tally.foreach { case ((i, event), n) => bump(snapshot(i), event, n) }
   }
 
   /** Running shared queries (exposed for tests/metrics). */
   def activeQueries: Seq[StreamingQuery] = queries.values.asScala.toSeq
 
-  /** Globally-ordered (O1) iterator with bounded driver memory.
-    * `toLocalIterator` runs ONE SEQUENTIAL JOB PER PARTITION, so
-    * draining a 32-partition `orderBy` costs 32 scheduling round-trips
-    * per batch — measured 4× slower end-to-end than a straight collect.
-    * Range-partitioning the sort to a few partitions keeps the memory
-    * bound (driver holds one partition's rows, not the whole result:
-    * the reason collect() was dropped) at a handful of round-trips.
-    * Ranges ascend with partition index, so sequential traversal
-    * preserves global order — the same invariant orderBy-then-iterate
-    * relies on.
+  /** Globally-ordered (O1) iterator with bounded driver memory, for
+    * catch-up only: a resume's history is not capped by admission
+    * control, so it cannot be collected at once the way a live
+    * micro-batch is. `toLocalIterator` runs ONE SEQUENTIAL JOB PER
+    * PARTITION, so draining a 32-partition `orderBy` costs 32
+    * scheduling round-trips — measured 4× slower end-to-end than a
+    * straight collect. Range-partitioning the sort to a few partitions
+    * keeps the memory bound (driver holds one partition's rows) at a
+    * handful of round-trips. Ranges ascend with partition index, so
+    * sequential traversal preserves global order — the same invariant
+    * orderBy-then-iterate relies on.
     */
-  private def orderedRows(df: DataFrame): java.util.Iterator[org.apache.spark.sql.Row] =
+  private def orderedRows(df: DataFrame): java.util.Iterator[Row] =
     df.repartitionByRange(4, RedditOps.emitOrder: _*)
       .sortWithinPartitions(RedditOps.emitOrder: _*)
       .toLocalIterator()
@@ -467,105 +497,100 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
     conns.values.asScala.filter(c => c.attached && !c.closed).toSeq
       .map(c => (c.rcBoundary, c.rcSuppress, c.rsBoundary, c.rsSuppress))
 
-  /** One micro-batch → all connections of this mask, single pass (plus
-    * one small aggregate for the counters).
+  /** One micro-batch → all connections of this mask in ONE Spark job
+    * (class scaladoc "Fan-out"): a single collect of the rows some
+    * connection emits or counts; counting, O1 ordering and routing run
+    * on the driver over that one admitted batch.
     */
   private def handleBatch(maskKey: String, batch: DataFrame, batchId: Long): Unit = {
     val snapshot = conns.values.asScala
-      .filter(c => !c.closed && c.maskKey == maskKey).toSeq
-    if (snapshot.isEmpty || batch.isEmpty) return
-    batch.persist()
-    try {
-      // live lower bound, inside the plan: only ids above the
-      // connection's per-type boundary exist for this connection at all
-      // (dedup against catch-up happens writer-side via the suppress
-      // thresholds — Connection scaladoc)
-      def boundaryPred(c: Connection): Column =
-        (col("event") === "rc" && col("id") > lit(c.rcBoundary)) ||
-          (col("event") === "rs" && col("id") > lit(c.rsBoundary)) ||
-          (col("event") === "rr" && col("id") > lit(c.rrBoundary))
+      .filter(c => !c.closed && c.maskKey == maskKey).toIndexedSeq
+    if (snapshot.isEmpty) return
+    // live lower bound, inside the plan: only ids above the
+    // connection's per-type boundary exist for this connection at all
+    // (dedup against catch-up happens writer-side via the suppress
+    // thresholds — Connection scaladoc)
+    def boundaryPred(c: Connection): Column =
+      (col("event") === "rc" && col("id") > lit(c.rcBoundary)) ||
+        (col("event") === "rs" && col("id") > lit(c.rsBoundary)) ||
+        (col("event") === "rr" && col("id") > lit(c.rrBoundary))
 
-      def tags(base: Connection => Column, predOf: Connection => Column): Column = filter(
-        array(snapshot.map { c =>
-          when(base(c) && predOf(c), lit(c.id)).otherwise(lit(null))
-        }: _*),
-        t => t.isNotNull)
+    // Counter lower bound per side (Connection.counterBound): a
+    // RESUMED side's catch-up scan already counts everything ≤
+    // suppress, so the live pass must start ABOVE suppress or the
+    // (boundary, suppress] overlap is counted twice (frames dedup
+    // writer-side; counters have no writer). An unresumed side has no
+    // catch-up and an immutable boundary (== suppress), so the
+    // boundary is the loss-free bound. Pre-attach batches see
+    // suppress = MaxValue and count nothing for a resumed side —
+    // exactly the rows its catch-up scan will count.
+    def counterPred(c: Connection): Column =
+      (col("event") === "rc" && col("id") > lit(c.counterBound(true))) ||
+        (col("event") === "rs" && col("id") > lit(c.counterBound(false)))
 
-      // Counter lower bound per side (Connection.counterBound): a
-      // RESUMED side's catch-up scan already counts everything ≤
-      // suppress, so the live pass must start ABOVE suppress or the
-      // (boundary, suppress] overlap is counted twice (frames dedup
-      // writer-side; counters have no writer). An unresumed side has no
-      // catch-up and an immutable boundary (== suppress), so the
-      // boundary is the loss-free bound. Pre-attach batches see
-      // suppress = MaxValue and count nothing for a resumed side —
-      // exactly the rows its catch-up scan will count.
-      def counterPred(c: Connection): Column =
-        (col("event") === "rc" && col("id") > lit(c.counterBound(true))) ||
-          (col("event") === "rs" && col("id") > lit(c.counterBound(false)))
+    // A1 counters: whitelist ∧ attr, deliberately before the type
+    // gate. Skipped when this batch id was already counted within
+    // this incarnation — a restart re-processes the batch in flight
+    // at the crash for frame delivery (at-least-once; clients dedup
+    // by id); counters share that one-batch residual (lastCounted
+    // scaladoc).
+    // The rr feed has NO counter: the reference keepalive payload is
+    // {"tcs","tss","tbs"} and stays so (counterPred's arms cover only
+    // rc/rs, so an rr batch would count nothing anyway).
+    val countThis = maskKey != "rr" &&
+      batchId > Option(lastCounted.get(maskKey)).map(_.toLong).getOrElse(-1L)
+    val emit = cidTags(snapshot)(c => boundaryPred(c) && RedditOps.pred(c.spec))
+    val counted =
+      if (countThis) cidTags(snapshot)(c => counterPred(c) &&
+        RedditOps.whitelistPred(c.spec) && RedditOps.attrPred(c.spec))
+      else typedLit(Array.empty[Int])
+    // one frame column per DISTINCT payload projection, built only on
+    // rows that some connection of that projection emits
+    val projections = snapshot.indices.groupBy(snapshot(_).spec.filterKeys).values.toSeq
+    val frames = projections.map { is =>
+      when(arrays_overlap(col("emit"), typedLit(is.toArray)),
+        RedditOps.sseFrame(col("id"), col("event"),
+          RedditOps.projectPayload(snapshot(is.head).spec, col("json"))))
+    }
+    // row layout: these five by position, then one frame per projection
+    val keyCols = Seq("event", "id", "created_utc", "emit", "counted")
+    val frameOf = new Array[Int](snapshot.size)
+    projections.zipWithIndex.foreach { case (is, k) =>
+      is.foreach(frameOf(_) = keyCols.size + k)
+    }
+    val rows = batch
+      .select(col("event"), col("id"), col("created_utc"), col("json"),
+        emit.as("emit"), counted.as("counted"))
+      .filter(size(col("emit")) > 0 || size(col("counted")) > 0)
+      .select(keyCols.map(col) ++ frames: _*)
+      .collect()
 
-      // A1 counters: whitelist ∧ attr, deliberately before the type
-      // gate. Skipped when this batch id was already counted within
-      // this incarnation — a restart re-processes the batch in flight
-      // at the crash for frame delivery (at-least-once; clients dedup
-      // by id); counters share that one-batch residual (lastCounted
-      // scaladoc).
-      // The rr feed has NO counter: the reference keepalive payload is
-      // {"tcs","tss","tbs"} and stays so (counterPred's arms cover only
-      // rc/rs, so an rr batch would count nothing anyway — skipping the
-      // aggregate just saves the no-op job).
-      val countThis = maskKey != "rr" &&
-        batchId > Option(lastCounted.get(maskKey)).map(_.toLong).getOrElse(-1L)
-      if (countThis) {
-        val counted = batch
-          .select(col("event"), explode(tags(counterPred, c =>
-            RedditOps.whitelistPred(c.spec) && RedditOps.attrPred(c.spec))).as("cid"))
-          .groupBy(col("cid"), col("event")).count()
-          .collect()
-        counted.foreach { r =>
-          Option(conns.get(r.getString(0))).foreach { c =>
-            val n = r.getLong(2)
-            if (r.getString(1) == "rc") c.tcs.addAndGet(n) else c.tss.addAndGet(n)
-          }
-        }
-        lastCounted.put(maskKey, batchId)
-      }
-
-      // emit pass: full predicate, per-connection payload projection,
-      // O1 sort, frames formatted inside Spark. toLocalIterator streams
-      // the sorted result partition-by-partition (global order is
-      // preserved — orderBy range-partitions), so driver memory is one
-      // partition of (connection × frame) pairs, not the whole batch.
-      val dataCol = snapshot.foldLeft(col("json")) { (acc, c) =>
-        if (c.spec.filterKeys.isEmpty) acc
-        else when(col("cid") === c.id,
-          RedditOps.projectPayload(c.spec, col("json"))).otherwise(acc)
-      }
-      val rows = orderedRows(batch
-        .select(col("id"), col("event"), col("created_utc"), col("json"),
-          explode(tags(boundaryPred, c => RedditOps.pred(c.spec))).as("cid"))
-        .withColumn("frame", RedditOps.sseFrame(col("id"), col("event"), dataCol))
-        .select(col("cid"), col("event"), col("id"), col("frame"),
-          col("created_utc")))
-
-      rows.forEachRemaining { r =>
-        Option(conns.get(r.getString(0))).foreach { c =>
-          val f = SseFrame(r.getString(1), r.getLong(2), r.getString(3))
-          if (!c.queue.offer(f)) {
-            c.dropped.incrementAndGet()
-            // overflow policy (class scaladoc): disconnect beats a
-            // silent gap — set the flag AND tear the socket down, so a
-            // writer thread blocked in a TCP write to a stalled client
-            // (the canonical slow client) unwinds too; the client
-            // re-syncs via *_start_id
-            if (disconnectSlowClients && !c.closed) {
-              c.closed = true
-              c.abort()
-            }
+    if (countThis) {
+      bumpCounters(snapshot, rows, 4)
+      lastCounted.put(maskKey, batchId)
+    }
+    // O1 emit order (RedditOps.emitOrder: created_utc, event, id)
+    val emitted = rows.filter(_.getSeq[Int](3).nonEmpty)
+      .sortBy(r => (r.getLong(2), r.getString(0), r.getLong(1)))
+    emitted.foreach { r =>
+      r.getSeq[Int](3).foreach { i =>
+        val c = snapshot(i)
+        // a connection that went away since the snapshot gets nothing
+        if (!c.closed && !c.queue.offer(
+            SseFrame(r.getString(0), r.getLong(1), r.getString(frameOf(i))))) {
+          c.dropped.incrementAndGet()
+          // overflow policy (class scaladoc): disconnect beats a
+          // silent gap — set the flag AND tear the socket down, so a
+          // writer thread blocked in a TCP write to a stalled client
+          // (the canonical slow client) unwinds too; the client
+          // re-syncs via *_start_id
+          if (disconnectSlowClients) {
+            c.closed = true
+            c.abort()
           }
         }
       }
-    } finally batch.unpersist()
+    }
   }
 
   // ---------------- HTTP layer ----------------
@@ -625,20 +650,20 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
       .filter((col("event") === "rc" && col("id") <= lit(rcMax)) ||
         (col("event") === "rs" && col("id") <= lit(rsMax)) ||
         (col("event") === "rr" && col("id") <= lit(rrMax)))
-    // counters (A1 quirk: before the type gate); rr counts nowhere
-    hist.filter(RedditOps.whitelistPred(spec) && RedditOps.attrPred(spec))
-      .groupBy(col("event")).count().collect().foreach { r =>
-        r.getString(0) match {
-          case "rc" => c.tcs.addAndGet(r.getLong(1))
-          case "rs" => c.tss.addAndGet(r.getLong(1))
-          case _    => ()
-        }
-      }
-    val frames = orderedRows(hist.filter(RedditOps.pred(spec))
-      .withColumn("json", RedditOps.projectPayload(spec, col("json")))
-      .select(RedditOps.sseFrame(col("id"), col("event"), col("json")).as("frame"),
+    // ONE pass counts and emits: every counted row (whitelist ∧ attr —
+    // the A1 quirk, before the type gate) comes back, with a null frame
+    // where the type gate drops it (pred = type ∧ attr ∧ whitelist); rr
+    // counts nowhere. The writer loop sends its first keepalive only
+    // after this returns, so the counters it reports are complete.
+    val rows = orderedRows(hist
+      .filter(RedditOps.whitelistPred(spec) && RedditOps.attrPred(spec))
+      .select(when(RedditOps.typePred(spec), RedditOps.sseFrame(col("id"),
+          col("event"), RedditOps.projectPayload(spec, col("json")))).as("frame"),
         col("created_utc"), col("event"), col("id")))
-    frames.forEachRemaining(r => write(r.getString(0)))
+    rows.forEachRemaining { r =>
+      bump(c, r.getString(2), 1L)
+      if (!r.isNullAt(0)) write(r.getString(0))
+    }
   }
 
   /** Superset over the reference (which ignores the header entirely —
