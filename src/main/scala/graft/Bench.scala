@@ -15,39 +15,15 @@ import org.apache.spark.sql.SparkSession
   * runs disagree by more than 3× a THIRD run breaks the tie (both runs
   * can land in one contention episode — round 8 shipped a 9.5 s number
   * for a ~2.1 s query that way); `runs_detail` then shows 3 entries for
-  * exactly those queries. The JSON line on stdout is the contract.
+  * exactly those queries. The two JSON lines on stdout are the contract:
+  * the full per-query map, then a compact total as the last line.
+  * The session is [[GraftSession]], the one Verify checks and Profile
+  * explains.
   */
 object Bench {
-  /** The benched session: `local[SPARK_GRAFT_CPUS]` (default 4) with the
-    * graft extensions. [[Explain]] prints plans from this same session.
-    */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Test-scale parquet files are single-digit-MB; split finer than the
-      // 128m default so scans parallelize across the local cores. (On a
-      // real cluster at 100 TB the default is the right choice.)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // graft_* SQL functions + the conf-gated range-join rewrite (q25)
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    // ERROR, not WARN: the documented bounded bare-window devices emit a
-    // WindowExec "No Partition Defined" WARN per plan, and at ~275
-    // queries the storm floods the driver's stdout/stderr capture —
-    // round 11 lost BENCH_r11.json's per-query tail to it. The bench's
-    // own diagnostics go through System.err explicitly.
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = GraftSession()
     // Untimed warm-up: touch every table once so footer reads, codegen
     // and JIT are out of the per-query timings (the first timed query
     // otherwise absorbs multiple seconds of session bring-up).
@@ -168,6 +144,12 @@ object Bench {
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (fileLine + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] file dump failed: $e") }
+    // The compact headline goes LAST: a capture that keeps only stdout's
+    // tail (2 000 chars) loses the ~9 KB full line above but still
+    // parses the total, the query count and the failures from this one.
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
+      s""""n_queries":${results.size},"failed":${failed.mkString("[", ",", "]")},""" +
+      s""""queries_file":"target/bench.json"}""")
     spark.stop()
   }
 }

@@ -7,13 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for the engine's custom Catalyst expressions, installed
-  * via the standard extensions hook:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)               // programmatic
-  *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
+  * via the standard extensions hook: [[GraftSession]] passes it to
+  * `withExtensions`; any other session can set
+  * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * After installation the codegen'd expressions are first-class SQL
   * functions — usable from `spark.sql`, views, and any SQL-only client:

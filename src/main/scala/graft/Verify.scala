@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — dump/check just those
     val keep: String => Boolean =
       if (only.isEmpty) _ => true else only(0).split(',').toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) — read as nanosecond Longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // graft_* SQL functions + the conf-gated range-join rewrite (q25)
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    // ERROR, not WARN: see Bench — the bounded bare-window devices' per-
-    // plan WindowExec WARN would otherwise flood the driver's capture.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -614,8 +614,8 @@ object EventTimeOps {
     * SHORT-CIRCUIT: a document dropped by an earlier gate never reaches
     * a later gate's kernel. On a drop-heavy stream the chain therefore
     * prices near its cheap members instead of the sum of all five
-    * (measured in SseBenchMain phase 9), while every kernel stays the
-    * oracle-verified batch operator VERBATIM (gopherRules,
+    * (BENCH_NOTES.md, "Round 11: the chained gate priced"), while every
+    * kernel stays the oracle-verified batch operator VERBATIM (gopherRules,
     * the bloom probe + exact-verify, the persisted perceptron margin,
     * scoreWithBigramModel, probeWithLshIndex — the batch-twin
     * discipline each standalone gate follows).
@@ -653,12 +653,7 @@ object EventTimeOps {
         Seq("the", "be", "to", "of", "and", "that", "have", "with"),
       threshold: Double = 0.5, maxBucket: Long = 1000L,
       expectedItems: Long = 1000000L, fpp: Double = 0.03,
-      lateness: String = "2 minutes", timeCol: String = "created_utc",
-      // false = the pricing/observability twin: every kernel sees the
-      // FULL batch (all five bits materialize for every doc, keep = the
-      // conjunction) — what the chain costs WITHOUT the short-circuit;
-      // phase 9 prices the pair to isolate what survivor-narrowing buys
-      shortCircuit: Boolean = true)(
+      lateness: String = "2 minutes", timeCol: String = "created_utc")(
       sink: (DataFrame, Long) => Unit): (DataStreamWriter[Row], BloomIngestHandle) = {
     import graft.operators.{Classifier, Dedup, TextAnalysis}
     import graft.sources.IndexManifest
@@ -710,21 +705,21 @@ object EventTimeOps {
           // band join cost real per-batch work even over zero probe
           // rows (the index side still plans/scans), which on an
           // all-drop batch would make the "short-circuited" chain pay
-          // every gate's fixed cost anyway (measured: phase 9's first
-          // cut ran 8× the LSH-alone gate on exactly that regime).
+          // every gate's fixed cost anyway (measured: the round-11
+          // pricing's first cut ran 8× the LSH-alone gate on exactly
+          // that regime).
           val docs = batch.select(col("doc_id"), col("text"), col("digest"))
             .localCheckpoint(true)
           // survivor sets are checkpointed too: each is read by the next
           // kernel AND the next survivor join AND its own emptiness
           // check — left lazy, the semi-join trees nest and the replay
           // overhead exceeds what the short-circuit saves (measured in
-          // phase 9's second cut)
+          // the round-11 pricing's second cut)
           def survivors(prev: DataFrame, verdict: DataFrame, bit: String) =
-            if (!shortCircuit) docs
-            else prev.join(verdict.filter(col(bit)).select("doc_id"),
+            prev.join(verdict.filter(col(bit)).select("doc_id"),
               Seq("doc_id"), "left_semi").localCheckpoint(true)
           def stage(in: DataFrame, bit: String)(kernel: => DataFrame): DataFrame =
-            if (shortCircuit && in.isEmpty)
+            if (in.isEmpty)
               in.select(col("doc_id"), lit(true).as(bit)).limit(0)
                 .localCheckpoint(true)
             else kernel.localCheckpoint(true)
@@ -783,20 +778,13 @@ object EventTimeOps {
           }
           // checkpointed: the sink reads it, then the accepted fold
           // below re-reads it — without this the 6-join plan runs twice
-          val keepCol =
-            if (shortCircuit) coalesce(col("ok_fuzzy"), lit(false))
-            else coalesce(col("ok_rules"), lit(false)) &&
-              coalesce(col("ok_exact"), lit(false)) &&
-              coalesce(col("ok_cls"), lit(false)) &&
-              coalesce(col("ok_lm"), lit(false)) &&
-              coalesce(col("ok_fuzzy"), lit(false))
           val out = docs.select(col("doc_id"))
             .join(rulesV, Seq("doc_id"), "left_outer")
             .join(exactV, Seq("doc_id"), "left_outer")
             .join(clsV, Seq("doc_id"), "left_outer")
             .join(lmV, Seq("doc_id"), "left_outer")
             .join(lshV, Seq("doc_id"), "left_outer")
-            .withColumn("keep", keepCol)
+            .withColumn("keep", coalesce(col("ok_fuzzy"), lit(false)))
             .localCheckpoint(true)
           sink(out, batchId)
           // accepted fold: only whole-chain admissions enter the sketch

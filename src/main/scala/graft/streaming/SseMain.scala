@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point: serve the SSE feed over a pair of log directories.
   *
   *   runMain graft.streaming.SseMain <rcDir> <rsDir> [port]
@@ -17,13 +15,7 @@ object SseMain {
     val Array(rcDir, rsDir, rest @ _*) = args
     val port = rest.headOption.map(_.toInt).getOrElse(8642)
     val rrDir = rest.lift(1).orNull
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-sse")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val server = new SseServer(spark, rcDir, rsDir, rrPath = rrDir, port = port).start()
     println(s"[sse] serving on http://localhost:${server.boundPort}/ (logs: $rcDir, $rsDir" +

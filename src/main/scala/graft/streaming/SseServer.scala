@@ -264,10 +264,10 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
     *
     * Deliberately NOT a persistent `checkpointLocation`: an explicit
     * per-mask checkpoint measured a 30× live fan-out latency regression
-    * (SseBenchMain: 8-client first→last 0.19 s → 7.2 s vs foreachBatch's
-    * default ephemeral temp checkpoint; the per-batch metadata-log
-    * writes are rename-based with a forked chmod when native Hadoop
-    * libs are absent). Beyond the measured cost, a persistent WAL buys
+    * (BENCH_NOTES.md, "Round 3": 8-client first→last 0.19 s → 7.2 s vs
+    * foreachBatch's default ephemeral temp checkpoint; the per-batch
+    * metadata-log writes are rename-based with a forked chmod when
+    * native Hadoop libs are absent). Beyond the measured cost, a persistent WAL buys
     * an in-process SSE server nothing: the progress object carries the
     * same committed offsets, and a SERVER crash loses the connections
     * the offsets existed for anyway.
