@@ -108,13 +108,19 @@ object GateBench {
         else (i.toLong, (1 to 30).map(w => s"fresh${i}w$w").mkString(" "))
       }, 2000, "doc_id", "text")
       // drop-heavy: 80% rule violators, 20% corpus-like docs, every text
-      // unique in-stream (the watermark dedup must not swallow rows). 10k-
-      // row batches: per-row kernel cost dominates per-batch fixed cost,
-      // the regime the short-circuit exists for
-      val chainDocs = new Input((0 until total).map { i =>
-        val t = if (i % 5 < 4) s"junk doc $i" else texts(i % texts.length) + s" u$i"
+      // unique in-stream (the watermark dedup must not swallow rows). A
+      // corpus-like doc is a corpus text's words reshuffled with the doc's
+      // own seed: the corpus's vocabulary for rules, classifier and LM, but
+      // word 3-shingles new to the LSH history, so docs reach the accept
+      // path. 10k-row batches: per-row kernel cost dominates per-batch
+      // fixed cost, the regime the short-circuit exists for
+      val chainRows = (0 until total).map { i =>
+        val t = if (i % 5 < 4) s"junk doc $i"
+          else new scala.util.Random(i).shuffle(texts(i % texts.length).split(" ").toSeq).mkString(" ")
         (i.toLong, t, 600L + i)
-      }, 10000, "doc_id", "text", "created_utc")
+      }
+      require(chainRows.map(_._2).distinct.size == total, "chain texts repeat")
+      val chainDocs = new Input(chainRows, 10000, "doc_id", "text", "created_utc")
       val strataRows = (0 until total).map(i => (i.toLong, texts(i % texts.length), s"s${i % 4}"))
       val strata = new Input(strataRows, 2000, "doc_id", "text", "stratum")
       val words = Array("the", "spark", "hash", "join", "table", "scan",
@@ -152,7 +158,8 @@ object GateBench {
           (s, t) => EventTimeOps.fuzzyDedupGateIngest(s, lshPath)(verdicts(t)), seenAll),
         Gate("chain-gate", chainDocs,
           (s, t) => EventTimeOps.chainedGateIngest(s, refDocs, chainClsPath, lmPath,
-            lshPath, chainThr, stopWords = stops)(verdicts(t))._1, seenAll),
+            lshPath, chainThr, stopWords = stops)(verdicts(t))._1,
+          t => seenAll(t).orElse(Option.when(t.kept.get == 0)("the chain kept no doc"))),
         // the chain's most expensive member alone on the chain's stream
         Gate("chain-lsh-alone", chainDocs,
           (s, t) => EventTimeOps.fuzzyDedupGateIngest(

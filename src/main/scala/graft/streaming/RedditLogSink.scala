@@ -22,7 +22,9 @@ import scala.collection.mutable.ArrayBuffer
   * watermark that already covers it and appends nothing: idempotence
   * falls out of the id-monotone single-writer contract rather than a
   * commit protocol, the same resumption algebra as the SSE side's
-  * two-threshold hand-off (suppress/boundary).
+  * two-threshold hand-off (suppress/boundary). The checkpoint commit
+  * stays synchronous; its metadata-log entries are written by
+  * [[NioCheckpointFileManager]], which both entry points install.
   *
   * The per-batch emit is DRIVER-side by design, not by accident: a
   * segment append is inherently serial (one id-ordered file + one
@@ -46,7 +48,8 @@ object RedditLogSink {
     */
   def appendStream(events: DataFrame, dir: String, checkpointDir: String,
       triggerMillis: Long = 1000L, targetRows: Long = 100000L,
-      maxSmall: Int = 16, graceMillis: Long = 60000L): StreamingQuery =
+      maxSmall: Int = 16, graceMillis: Long = 60000L): StreamingQuery = {
+    NioCheckpointFileManager.install(events.sparkSession)
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMillis))
@@ -55,6 +58,7 @@ object RedditLogSink {
         ()
       }
       .start()
+  }
 
   /** Quality-GATED ingest (round 10): the CCNet perplexity gate
     * composed INTO the log's writer path — each micro-batch's `json`
@@ -93,6 +97,7 @@ object RedditLogSink {
     val model = spark.read.parquet(s"$lmPath/model").persist()
     val ctx = spark.read.parquet(s"$lmPath/ctx").persist()
     val oov = spark.read.parquet(s"$lmPath/consts").head().getDecimal(1)
+    NioCheckpointFileManager.install(spark)
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMillis))

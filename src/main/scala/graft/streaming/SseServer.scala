@@ -262,15 +262,13 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
     * current watermark and silently dropped the gap). A query that died
     * before any progress keeps the original pins — no gap either.
     *
-    * Deliberately NOT a persistent `checkpointLocation`: an explicit
-    * per-mask checkpoint measured a 30× live fan-out latency regression
-    * (BENCH_NOTES.md, "Round 3": 8-client first→last 0.19 s → 7.2 s vs
-    * foreachBatch's default ephemeral temp checkpoint; the per-batch
-    * metadata-log writes are rename-based with a forked chmod when
-    * native Hadoop libs are absent). Beyond the measured cost, a persistent WAL buys
-    * an in-process SSE server nothing: the progress object carries the
-    * same committed offsets, and a SERVER crash loses the connections
-    * the offsets existed for anyway.
+    * Deliberately NOT a persistent `checkpointLocation`: the feeds run
+    * on foreachBatch's ephemeral temp checkpoint, because a persistent
+    * WAL buys an in-process SSE server nothing. The progress pins above
+    * already carry the committed offsets, and a SERVER crash loses the
+    * connections the offsets existed for anyway. The temp checkpoint's
+    * metadata-log writes go through [[NioCheckpointFileManager]]
+    * (installed by [[start]]), so they fork no `chmod`.
     *
     * Failure-recovery delivery is therefore at-least-once: the batch in
     * flight at the crash re-processes on restart (frames carry ids, so
@@ -893,6 +891,7 @@ class SseServer(spark: SparkSession, rcPath: String, rsPath: String,
     // so a persistently-failing query restarted by the health tick would
     // leak one temp dir per incarnation without this.
     spark.conf.set("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
+    NioCheckpointFileManager.install(spark)
     // live queries start lazily per type mask on first connection — a
     // server whose fleet never asks for submissions never touches rs
     http = HttpServer.create(new InetSocketAddress(port), 0)
