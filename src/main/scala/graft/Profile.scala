@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev profiler for registered queries, on the session [[Bench]] times
   * (set SPARK_GRAFT_CPUS as for the bench):
@@ -9,7 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *
   * For each query it prints the formatted plan on stdout, then forces the
   * query with a noop write while a listener prints, on stderr, every job
-  * (`[job]`) and every stage over 100 ms (`[stage]`), followed by the
+  * (`[job]`: its time, stage count, SQL execution id and the first
+  * `graft.` frame of the action that submitted it, taken from the
+  * execution's call site, so adaptive stage jobs, which run on a pool
+  * thread, still name their query code) and every stage over 100 ms
+  * (`[stage]`), followed by the
   * query's build and run wall times (`[query]`) and the blocks still
   * pinned when it completes (`[store]`, before the bench's hygiene pass
   * frees them). The eager driver-side jobs a query runs while its
@@ -20,8 +26,16 @@ object Profile {
     require(args.length >= 2, "usage: graft.Profile <sfDir> <query>...")
     val sfDir = args.head
     val spark = GraftSession()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          graftFrame(x.details).foreach(execSite.put(x.executionId, _))
+        case _ => ()
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val ms = (for { a <- si.completionTime; b <- si.submissionTime }
@@ -29,12 +43,18 @@ object Profile {
         if (ms > 100)
           System.err.println(f"[stage] $ms%6d ms  tasks=${si.numTasks}%3d  ${si.name.take(100)}")
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobStart.put(e.jobId, System.nanoTime())
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties).flatMap(p =>
+          Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        val site = exec.flatMap(x => Option(execSite.get(x)))
+          .orElse(e.stageInfos.lastOption.flatMap(si => graftFrame(si.details)))
+        jobStart.put(e.jobId, (System.nanoTime(), f"stages=${e.stageInfos.size}%2d  " +
+          s"sql=${exec.fold("-")(_.toString)}  at ${site.getOrElse("-")}"))
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val t0 = Option(jobStart.remove(e.jobId))
-        val ms = t0.map(t => (System.nanoTime() - t) / 1000000L).getOrElse(-1L)
-        System.err.println(f"[job]   $ms%6d ms  id=${e.jobId}")
+        val (t0, what) = Option(jobStart.remove(e.jobId)).getOrElse((-1L, ""))
+        val ms = if (t0 < 0) -1L else (System.nanoTime() - t0) / 1000000L
+        System.err.println(f"[job]   $ms%6d ms  id=${e.jobId}%4d  $what")
       }
     })
     Seq("documents", "embeddings").foreach(t =>

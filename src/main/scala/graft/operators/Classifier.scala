@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
@@ -109,7 +110,7 @@ object Classifier {
     import graft.sources.IndexManifest
     val m = IndexManifest.require(path, "perceptron")
     val spark = docs.sparkSession
-    val wdf = broadcast(spark.read.parquet(s"$path/weights")
+    val wdf = broadcast(Tables.readParquet(spark, s"$path/weights")
       .withColumnRenamed("w", "wt"))
     hashedFeatures(docs, m.params("n_buckets").toInt)
       .join(wdf, Seq("bucket"))
@@ -243,7 +244,7 @@ object Classifier {
     val m = IndexManifest.require(path, "perceptron")
     val nBuckets = m.params("n_buckets").toInt
     val spark = newDocs.sparkSession
-    val init = spark.read.parquet(s"$path/weights").collect()
+    val init = Tables.readParquet(spark, s"$path/weights").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (feats, labels) = featsAndLabels(newDocs, labelPred, nBuckets)
     val w = trainedWeights(feats, labels, nBuckets, passes, init = init)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -202,7 +202,7 @@ object Curation {
     */
   def loadKeepList(spark: SparkSession, path: String): DataFrame = {
     IndexManifest.require(path, "keep-list")
-    spark.read.parquet(s"$path/verdict")
+    Tables.readParquet(spark, s"$path/verdict")
   }
 
   /** The verdict as a CACHE: serve `path`'s artifact when its manifest
@@ -299,7 +299,7 @@ object Curation {
         IndexManifest.Manifest("curation", params, rows, maxId))
     }
     IndexManifest.require(path, "curation")
-    spark.read.parquet(s"$path/verdict")
+    Tables.readParquet(spark, s"$path/verdict")
   }
 
   /** Drop accounting for the COMPOSED pipeline (d93) — [[keepSummary]]'s

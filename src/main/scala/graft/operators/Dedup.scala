@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1386,7 +1387,7 @@ object Dedup {
       IndexManifest.require(path, "gram", Map("min_len" -> minLen.toLong)), path)
     if (inc.isEmpty) return
     IndexManifest.requireNoOrphans(
-      increment.sparkSession.read.parquet(s"$path/grams"), "wm", inc.man, path)
+      Tables.readParquet(increment.sparkSession, s"$path/grams"), "wm", inc.man, path)
     positionalGrams(increment, minLen).select(col("hs")).distinct()
       .withColumn("wm", lit(inc.maxId))
       .write.mode("append").parquet(s"$path/grams")
@@ -1413,7 +1414,7 @@ object Dedup {
     // TIME TRAVEL (d154, the d153 device on the wm lineage column —
     // saveGramIndex doc): snapshot N's gram SET is the rows at or
     // below version N's watermark, one pushed wm cut before the probe
-    val raw = increment.sparkSession.read.parquet(s"$indexPath/grams")
+    val raw = Tables.readParquet(increment.sparkSession, s"$indexPath/grams")
     val histHs = asOfVersion match {
       case None => raw
       case Some(v) =>
@@ -1684,7 +1685,7 @@ object Dedup {
     * recomputed") — expected: unrecomputability is fine for blocks
     * nothing references.
     */
-  private def freeSnapshot(df: DataFrame): Unit =
+  private[graft] def freeSnapshot(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
@@ -2025,9 +2026,9 @@ object Dedup {
     var sig: DataFrame = null
     IndexManifest.awaitAll(Seq(
       () => IndexManifest.requireNoOrphans(
-        newDocs.sparkSession.read.parquet(s"$path/sig"), "doc_id", man, path),
+        Tables.readParquet(newDocs.sparkSession, s"$path/sig"), "doc_id", man, path),
       () => IndexManifest.requireNoOrphans(
-        newDocs.sparkSession.read.parquet(s"$path/bands"), "doc_id", man, path),
+        Tables.readParquet(newDocs.sparkSession, s"$path/bands"), "doc_id", man, path),
       // checkpointed: both table writes read sig (saveLshIndex doc)
       () => sig = minhash(hashedShingles(newDocs), k).localCheckpoint(true)))
     // the two appends are order-independent (a crash between them is
@@ -2080,12 +2081,12 @@ object Dedup {
     // past the cap since must not retroactively mute version-N verdicts)
     val (hsig, hbands) = asOfVersion match {
       case None =>
-        (spark.read.parquet(s"$path/sig"),
-          spark.read.parquet(s"$path/bands"))
+        (Tables.readParquet(spark, s"$path/sig"),
+          Tables.readParquet(spark, s"$path/bands"))
       case Some(v) =>
         val wm = graft.sources.IndexManifest.readVersion(path, v).corpusMaxId
-        (spark.read.parquet(s"$path/sig").filter(col("doc_id") <= wm),
-          spark.read.parquet(s"$path/bands").filter(col("doc_id") <= wm))
+        (Tables.readParquet(spark, s"$path/sig").filter(col("doc_id") <= wm),
+          Tables.readParquet(spark, s"$path/bands").filter(col("doc_id") <= wm))
     }
     // probe-time bucket cap over the (possibly snapshot-cut) counts
     val ok = hbands.groupBy(col("bno"), col("bkey"))

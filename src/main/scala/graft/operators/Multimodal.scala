@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -247,7 +248,7 @@ object Multimodal {
       IndexManifest.require(path, "phash"), path)
     if (inc.isEmpty) return
     IndexManifest.requireNoOrphans(
-      newMedia.sparkSession.read.parquet(s"$path/blocks"), "doc_id", inc.man, path)
+      Tables.readParquet(newMedia.sparkSession, s"$path/blocks"), "doc_id", inc.man, path)
     phashBlocks(newMedia, inc.man.params("radius").toInt).write.mode("append")
       .parquet(s"$path/blocks")
     // every append is a new snapshot version (the d153 device)
@@ -271,7 +272,7 @@ object Multimodal {
     // as-of probe cuts the block table with one pushed doc_id filter —
     // dedup an increment against exactly the media corpus version a
     // past run published (the d157 device on the media index)
-    val raw = increment.sparkSession.read.parquet(s"$path/blocks")
+    val raw = Tables.readParquet(increment.sparkSession, s"$path/blocks")
     val hb = asOfVersion match {
       case None => raw
       case Some(v) =>

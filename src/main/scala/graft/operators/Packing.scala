@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -333,7 +334,7 @@ object Packing {
     var total = 0L
     IndexManifest.awaitAll(Seq(
       () => wm = IndexManifest.watermark(docs, "doc_id"),
-      () => total = docs.sparkSession.read.parquet(s"$path/shards")
+      () => total = Tables.readParquet(docs.sparkSession, s"$path/shards")
         .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)))
     val (rows, maxId) = wm
     // VERSIONED (the d153 device): the store is doc_id-monotone
@@ -379,7 +380,7 @@ object Packing {
     val m = IndexManifest.read(path)
     require(m.kind == "shards", s"shardAudit: manifest kind ${m.kind}")
     val budget = m.params("budget")
-    val st = spark.read.parquet(s"$path/shards")
+    val st = Tables.readParquet(spark, s"$path/shards")
       .select(col("doc_id"), col("n_tokens"), col("start_token"),
         col("text"), col("shard_id").cast("long").as("shard_id"))
     val inShard = Window.partitionBy(col("shard_id")).orderBy(col("start_token"))
@@ -460,7 +461,7 @@ object Packing {
     catch { case _: IndexManifestException => None }
     man match {
       case Some(m) =>
-        val storeIds = docs.sparkSession.read.parquet(s"$path/shards")
+        val storeIds = Tables.readParquet(docs.sparkSession, s"$path/shards")
           .select(col("doc_id"))
         val selPrefix = selected.filter(col("doc_id") <= m.corpusMaxId)
           .select(col("doc_id"))
@@ -538,7 +539,7 @@ object Packing {
       return
     }
     IndexManifest.requireNoOrphans(
-      newDocs.sparkSession.read.parquet(s"$path/shards"), "doc_id", m, path)
+      Tables.readParquet(newDocs.sparkSession, s"$path/shards"), "doc_id", m, path)
     // increment-local prefix sum in the same deterministic order, then
     // offset by the frozen stream's length (both references to the input
     // start_token column — the local offset)
@@ -569,7 +570,7 @@ object Packing {
   def readShard(spark: org.apache.spark.sql.SparkSession, path: String,
       shardId: Long): DataFrame = {
     graft.sources.IndexManifest.require(path, "shards")
-    spark.read.parquet(s"$path/shards").filter(col("shard_id") === shardId)
+    Tables.readParquet(spark, s"$path/shards").filter(col("shard_id") === shardId)
   }
 
   /** TIME-TRAVEL read of the shard store (d155) — the training corpus
@@ -590,7 +591,7 @@ object Packing {
     import graft.sources.IndexManifest
     IndexManifest.require(path, "shards")
     val snap = IndexManifest.readVersion(path, version)
-    spark.read.parquet(s"$path/shards")
+    Tables.readParquet(spark, s"$path/shards")
       .filter(col("doc_id") <= snap.corpusMaxId)
   }
 
@@ -614,7 +615,7 @@ object Packing {
         s"shardStoreDiff: vFrom=$vFrom must precede vTo=$vTo")
     val wmFrom = IndexManifest.readVersion(path, vFrom).corpusMaxId
     val wmTo = IndexManifest.readVersion(path, vTo).corpusMaxId
-    spark.read.parquet(s"$path/shards")
+    Tables.readParquet(spark, s"$path/shards")
       .filter(col("doc_id") > wmFrom && col("doc_id") <= wmTo)
   }
 
@@ -759,7 +760,7 @@ object Packing {
   def packShardStore(spark: org.apache.spark.sql.SparkSession, path: String,
       ctxLen: Int): DataFrame = {
     graft.sources.IndexManifest.require(path, "shards")
-    packShardRows(spark.read.parquet(s"$path/shards"), ctxLen)
+    packShardRows(Tables.readParquet(spark, s"$path/shards"), ctxLen)
   }
 
   /** [[packShardStore]] AS OF snapshot `version` (d156) — the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{IndexManifest, IndexManifestException}
+import graft.sources.{IndexManifest, IndexManifestException, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1046,14 +1046,14 @@ object Similarity {
       throw new IndexManifestException(
         s"probes=$probes exceeds the index's ${man.params("cells")} cells ($indexPath)")
     val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$indexPath/cents")
+    val cents = Tables.readParquet(spark, s"$indexPath/cents")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
     // rebuild (code)(sub)(dim) — m is the MIDDLE axis (see the save's
     // layout note); getting this wrong trips the kernel's qe-length
     // guard into all-NULL distances, which the bit-identity spec
     // caught on first run
-    val bookRows = spark.read.parquet(s"$indexPath/books")
+    val bookRows = Tables.readParquet(spark, s"$indexPath/books")
       .select(col("code"), col("sub"), col("dim"), col("v"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val books: Seq[Seq[Seq[Double]]] = bookRows.groupBy(_._1).toSeq.sortBy(_._1)
@@ -1068,7 +1068,7 @@ object Similarity {
       throw new IndexManifestException(
         s"index data at $indexPath has book shape (ks=${books.length}, m=$m) " +
           s"but manifest records (ks=${man.params("ks")}, m=${man.params("m")}) — torn or mixed index")
-    val corpus = spark.read.parquet(s"$indexPath/codes")
+    val corpus = Tables.readParquet(spark, s"$indexPath/codes")
       .select(col("vec_id").as("neighbor_id"),
         col("cell").cast("long").as("cell"), col("codes"))
     val q = normalized(queries).filter(queryPred)
@@ -1610,10 +1610,10 @@ object Similarity {
     */
   private def loadSq8Constants(spark: SparkSession, path: String)
       : (Seq[(Long, Seq[Double])], Seq[Double], Seq[Double]) = {
-    val cents = spark.read.parquet(s"$path/cents")
+    val cents = Tables.readParquet(spark, s"$path/cents")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
-    val quant = spark.read.parquet(s"$path/quant")
+    val quant = Tables.readParquet(spark, s"$path/quant")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
     (cents, quant.map(_._2).toSeq, quant.map(_._3).toSeq)
@@ -1644,7 +1644,7 @@ object Similarity {
     IndexManifest.awaitAll(Seq(
       () => consts = loadSq8Constants(increment.sparkSession, path),
       () => IndexManifest.requireNoOrphans(
-        increment.sparkSession.read.parquet(s"$path/codes"), "vec_id",
+        Tables.readParquet(increment.sparkSession, s"$path/codes"), "vec_id",
         man, path)))
     val (cents, mins, scales) = consts
     // widened + laid out like saveIvfSq8Index (the append is the same
@@ -1717,7 +1717,7 @@ object Similarity {
     // overwrite rebuild resets the lineage), so snapshot N is exactly
     // the code rows at or below version N's watermark scored with the
     // live constants — one pushed id cut beside the cell pruning
-    val raw0 = spark.read.parquet(s"$indexPath/codes")
+    val raw0 = Tables.readParquet(spark, s"$indexPath/codes")
     val raw = asOfVersion match {
       case None => raw0
       case Some(v) =>
@@ -2305,7 +2305,7 @@ object Similarity {
     if (inc.isEmpty) return
     val man = inc.man
     IndexManifest.requireNoOrphans(
-      increment.sparkSession.read.parquet(s"$path/blocks"), "vec_id", man, path)
+      Tables.readParquet(increment.sparkSession, s"$path/blocks"), "vec_id", man, path)
     val (outDims, radius) =
       (man.params("out_dims").toInt, man.params("radius").toInt)
     // same one-task-per-directory write layout as saveSrpIndex
@@ -2352,7 +2352,7 @@ object Similarity {
     // vec_id-monotone append-only, so snapshot N is exactly the rows at
     // or below version N's watermark — one pushed id cut (row-group
     // stats) beside the block pruning; no file-level snapshot metadata
-    val raw0 = spark.read.parquet(s"$indexPath/blocks")
+    val raw0 = Tables.readParquet(spark, s"$indexPath/blocks")
     val raw = asOfVersion match {
       case None => raw0
       case Some(v) =>
@@ -2518,29 +2518,46 @@ object Similarity {
     * and the oracle unrolls the same rounds as CTEs). The final beam,
     * self excluded, yields top-`k`.
     *
-    * Scale shape: the graph is built once and localCheckpointed (the
-    * PageRank iteration device); each round touches only
-    * |Q|·beam·(knnK+1) candidate ids — one equi-join against the edge
-    * set, one against the corpus embeddings (at 100 TB the corpus
-    * store is bucketed by vec_id so only the candidate side shuffles;
-    * DiskANN instead co-locates vectors WITH adjacency lists — same
-    * locality, storage-side), one per-query window over ≤ beam·(knnK+2)
-    * rows. The corpus is never scanned per query — that is the whole
-    * point of the family. Returns (query_id, rk, neighbor_id, cosine).
+    * Scale shape: the graph is built once, joined once with the
+    * corpus vectors into an adjacency table (DiskANN co-locates vectors
+    * WITH adjacency lists) and localCheckpointed (the PageRank iteration
+    * device); each round touches only |Q|·beam·(knnK+1) candidate rows
+    * — one equi-join of the adjacency against the broadcast beam, one
+    * per-query window over ≤ beam·(knnK+2) rows (see [[beamWalk]]). The
+    * corpus is never scanned per round — that is the whole point of the
+    * family. Returns (query_id, rk, neighbor_id, cosine).
     */
   def graphBeamSearch(emb: DataFrame, queryPred: Column, k: Int,
       beam: Int, rounds: Int, knnK: Int, bits: Int = 6,
       entries: Int = 4): DataFrame =
-    beamTopK(beamWalk(emb, navGraph(emb, knnK, bits).localCheckpoint(true),
+    beamTopK(beamWalk(emb, navGraph(emb, knnK, bits),
       queryPred, k, beam, rounds, entries).last._2, k)
 
   /** The shared walk body of [[graphBeamSearch]] /
-    * [[graphBeamSearchIndexed]] / [[graphBeamRecallCurve]]: `rounds`
-    * expansion steps over an already-materialized edge set, returning
-    * the beam AFTER EACH round (round i's beam is a prefix of the same
-    * chain — the recall curve reads them all, the search only the
-    * last). Each beam is localCheckpointed (the PageRank iteration
-    * device), so consumers never recompute the walk.
+    * [[graphBeamSearchIndexed]] / [[graphBeamRecallCurve]] /
+    * [[graphBeamRecallKCenter]]: `rounds` expansion steps over an edge
+    * set, returning the beam AFTER EACH round (round i's beam is a
+    * prefix of the same chain — the recall curve reads them all, the
+    * search only the last). Each beam is localCheckpointed (the PageRank
+    * iteration device), so consumers never recompute the walk.
+    *
+    * Shape (the DiskANN layout, Subramanya et al. 2019: each adjacency
+    * row stored with its destination's vector):
+    *  - once per walk, the edges join the corpus vectors into an
+    *    ADJACENCY table (src, vid, e, nrm), localCheckpointed: it pins
+    *    |E| rows × dim doubles for the walk's duration and is released
+    *    when the walk returns (the beams do not read it after their
+    *    own checkpoints);
+    *  - beam rows carry their query's vector (qe, qn), so a round needs
+    *    no query or corpus lookup: adjacency ⋈ broadcast(beam) → exact
+    *    cosine → union with the beam → one exchange on query_id →
+    *    dropDuplicates(query_id, vid) → the (cosine desc, vid asc)
+    *    row_number cut → localCheckpoint. Three Spark jobs a round (the
+    *    broadcast, the exchange, the checkpoint). Each round broadcasts
+    *    the beam: |Q|·beam rows, each with its dim-double query vector.
+    * A candidate already in the beam, or reached over two edges, scores
+    * the same double from the same vectors, so dropping duplicates
+    * leaves the total-order cut — and the walk — unchanged.
     */
   private def beamWalk(emb: DataFrame, edges: DataFrame, queryPred: Column,
       k: Int, beam: Int, rounds: Int, entries: Int,
@@ -2550,7 +2567,6 @@ object Similarity {
     require(entryIds.forall(ids => ids.nonEmpty && ids.size <= beam),
       s"entryIds size ${entryIds.map(_.size)} must be in [1, beam=$beam]")
     val n = normalized(emb)
-    val corpus = n.select(col("vec_id"), col("e"), col("nrm"))
     val q = n.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
     val entPred = entryIds match {
@@ -2559,29 +2575,34 @@ object Similarity {
     }
     val ent = n.filter(entPred)
       .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"))
+    val adj = edges.join(n, edges("dst") === n("vec_id"))
+      .select(col("src"), col("dst").as("vid"), col("e"), col("nrm"))
+      .localCheckpoint(true)
     var b = q.crossJoin(broadcast(ent))
       .select(col("query_id"), col("vid"),
-        (dot("qe", "ce") / (col("qn") * col("cn"))).as("cosine"))
+        (dot("qe", "ce") / (col("qn") * col("cn"))).as("cosine"),
+        col("qe"), col("qn"))
       .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vid").asc)
-    (1 to rounds).map { i =>
-      val cand = b.join(edges, b("vid") === edges("src"))
-        .select(col("query_id"), col("dst").as("vid")).distinct()
-      val fresh = cand.join(b.select(col("query_id"), col("vid")),
-          Seq("query_id", "vid"), "left_anti")
-        .join(corpus, col("vid") === corpus("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
+    val beams = (1 to rounds).map { i =>
+      val cand = adj.join(broadcast(b.select(col("query_id"), col("vid").as("src"),
+          col("qe"), col("qn"))), Seq("src"))
         .select(col("query_id"), col("vid"),
-          (dot("qe", "e") / (col("qn") * col("nrm"))).as("cosine"))
-      b = b.union(fresh)
+          (dot("qe", "e") / (col("qn") * col("nrm"))).as("cosine"),
+          col("qe"), col("qn"))
+      b = b.union(cand)
+        .repartition(col("query_id"))
+        .dropDuplicates("query_id", "vid")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= beam)
-        .select(col("query_id"), col("vid"), col("cosine"))
+        .drop("rn")
         .localCheckpoint(true)
       (i, b)
     }
+    Dedup.freeSnapshot(adj)
+    beams
   }
 
   private def beamTopK(b: DataFrame, k: Int): DataFrame =
@@ -2704,7 +2725,7 @@ object Similarity {
       emb: DataFrame, queryPred: Column, k: Int, beam: Int, rounds: Int,
       entries: Int = 4): DataFrame = {
     IndexManifest.require(path, "nav-graph")
-    beamTopK(beamWalk(emb, spark.read.parquet(s"$path/edges"),
+    beamTopK(beamWalk(emb, Tables.readParquet(spark, s"$path/edges"),
       queryPred, k, beam, rounds, entries).last._2, k)
   }
 
@@ -3305,7 +3326,7 @@ object Similarity {
           vs.filter(v => v > baseVer && v <= upTo)
             .map(i => s"$path/deltas/v$i")
       def mergedOf(tbl: String, keys: Seq[String], sumCol: String): DataFrame =
-        parts.map(p => spark.read.parquet(s"$p/$tbl"))
+        parts.map(p => Tables.readParquet(spark, s"$p/$tbl"))
           .reduce(_.unionByName(_))
           .groupBy(keys.map(col): _*)
           .agg(sum(col(sumCol)).cast("decimal(38,12)").as(sumCol))
@@ -3362,7 +3383,7 @@ object Similarity {
     // stats ahead of the manifest = a previous append crashed between
     // the stats write and the manifest flip; merging again would
     // double-count the increment with no other detection possible
-    val recorded = spark.read.parquet(s"$path/nrow").head().getLong(0)
+    val recorded = Tables.readParquet(spark, s"$path/nrow").head().getLong(0)
     if (recorded != man.corpusRows)
       throw new IndexManifestException(
         s"spectral stats at $path were computed over $recorded rows but " +
@@ -3377,10 +3398,10 @@ object Similarity {
       s"spectral append requires dense ${man.params("dims")}-wide " +
         s"embeddings on every row: $rows increment rows but only $incN " +
         "carry a full embedding")
-    val mergedSx = spark.read.parquet(s"$path/sx").unionByName(incSx)
+    val mergedSx = Tables.readParquet(spark, s"$path/sx").unionByName(incSx)
       .groupBy(col("j"))
       .agg(sum(col("sx")).cast("decimal(38,12)").as("sx"))
-    val mergedSxx = spark.read.parquet(s"$path/sxx").unionByName(incSxx)
+    val mergedSxx = Tables.readParquet(spark, s"$path/sxx").unionByName(incSxx)
       .groupBy(col("i"), col("j"))
       .agg(sum(col("sxx")).cast("decimal(38,12)").as("sxx"))
     // the eager localCheckpoint inside writeSpectralTables materializes
@@ -3442,7 +3463,7 @@ object Similarity {
     val parts = (if (baseVer > 0) Seq(s"$path/deltas/base-v$baseVer") else Nil) ++
       perVer.map(i => s"$path/deltas/v$i")
     def merged(tbl: String, keys: Seq[String], sumCol: String): DataFrame =
-      parts.map(p => spark.read.parquet(s"$p/$tbl"))
+      parts.map(p => Tables.readParquet(spark, s"$p/$tbl"))
         .reduce(_.unionByName(_))
         .groupBy(keys.map(col): _*)
         .agg(sum(col(sumCol)).cast("decimal(38,12)").as(sumCol))
@@ -3465,11 +3486,11 @@ object Similarity {
   def loadSpectralIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): SpectralModel = {
     val man = IndexManifest.require(path, "spectral")
-    val mean = spark.read.parquet(s"$path/mean")
+    val mean = Tables.readParquet(spark, s"$path/mean")
       .orderBy(col("j")).collect().map(_.getDouble(1))
     SpectralModel(man.params("dims").toInt, man.params("iters").toInt,
-      mean, spark.read.parquet(s"$path/cov"),
-      spark.read.parquet(s"$path/iter"))
+      mean, Tables.readParquet(spark, s"$path/cov"),
+      Tables.readParquet(spark, s"$path/iter"))
   }
 
   /** SYNC a persisted spectral model to the current corpus: the shared

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -451,7 +452,7 @@ object TextAnalysis {
   def bpeEncodeIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame): DataFrame = {
     graft.sources.IndexManifest.require(path, "bpe")
-    bpeEncodeWith(docs, spark.read.parquet(s"$path/merges"))
+    bpeEncodeWith(docs, Tables.readParquet(spark, s"$path/merges"))
   }
 
   /** Encode under an ALREADY-TRAINED merge frame (step, s1, s2) —
@@ -476,7 +477,7 @@ object TextAnalysis {
       IndexManifest.isFresh(path, docs, "doc_id")
     } catch { case _: IndexManifestException => false }
     if (!hit) saveBpeModel(docs, path, nMerges)
-    docs.sparkSession.read.parquet(s"$path/merges")
+    Tables.readParquet(docs.sparkSession, s"$path/merges")
   }
 
   /** WordPiece greedy segmentation (d137) — the THIRD tokenizer family
@@ -1001,7 +1002,7 @@ object TextAnalysis {
     val m = inc.man
     val spark = newDocs.sparkSession
     val p = m.params("p").toInt
-    val storedMax = spark.read.parquet(s"$path/state")
+    val storedMax = Tables.readParquet(spark, s"$path/state")
       .filter(col("key") === "max_id")
       .head().getDecimal(1).longValueExact()
     if (storedMax != m.corpusMaxId)
@@ -1011,12 +1012,12 @@ object TextAnalysis {
           "previous append crashed before its manifest flip; rebuild " +
           "(cardStoreSync) instead of retrying")
     val (incRegs, incState) = cardPieces(newDocs, p)
-    val mergedRegs = spark.read.parquet(s"$path/regs")
+    val mergedRegs = Tables.readParquet(spark, s"$path/regs")
       .unionByName(incRegs)
       .groupBy(col("kind"), col("j")).agg(max(col("mj")).as("mj"))
       .select(col("kind"), col("j"), col("mj").cast("int").as("mj"))
       .localCheckpoint(true) // pin before overwriting its own source
-    val mergedState = spark.read.parquet(s"$path/state")
+    val mergedState = Tables.readParquet(spark, s"$path/state")
       .unionByName(incState)
       .groupBy(col("key"))
       .agg(sum(col("value")).cast("decimal(38,12)").as("v"),
@@ -1055,9 +1056,9 @@ object TextAnalysis {
     val m = IndexManifest.read(path)
     require(m.kind == "card", s"cardFromStore: manifest kind ${m.kind}")
     val p = m.params("p").toInt
-    val regs = spark.read.parquet(s"$path/regs").collect()
+    val regs = Tables.readParquet(spark, s"$path/regs").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val state = spark.read.parquet(s"$path/state").collect()
+    val state = Tables.readParquet(spark, s"$path/state").collect()
       .map(r => r.getString(0) -> r.getDecimal(1)).toMap
     import spark.implicits._
     spark.createDataset(cardMetrics(regs, state, p)).toDF("metric", "value")
@@ -1179,21 +1180,23 @@ object TextAnalysis {
         },
       () => docs.select(col("doc_id"), size(w).cast("long").as("dl"))
         .write.mode("overwrite").parquet(s"$path/lens"),
+      // the corpus constants and the watermark (count, max id) in one agg
       () => c = docs.agg(count(lit(1)).cast("long"),
-        coalesce(sum(size(w)).cast("long"), lit(0L))).head()))
+        coalesce(sum(size(w)).cast("long"), lit(0L)),
+        max(col("doc_id").cast("long"))).head()))
     val (nDocs, sumDl) = (c.getLong(0), c.getLong(1))
+    val maxId = if (c.isNullAt(2)) -1L else c.getLong(2)
     val spark = docs.sparkSession
     import spark.implicits._
     Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
-    val (rows, maxId) = graft.sources.IndexManifest.watermark(docs, "doc_id")
     // sum_dl rides the manifest so (a) the append path merges constants
     // without trusting a possibly-mid-crash consts table and (b) every
     // VERSION pins its own (n_docs, sum_dl) pair for as-of serving
     graft.sources.IndexManifest.writeVersioned(path,
       graft.sources.IndexManifest.Manifest(
         "bm25", Map("term_buckets" -> termBuckets.toLong,
-          "sum_dl" -> sumDl), rows, maxId))
+          "sum_dl" -> sumDl), nDocs, maxId))
   }
 
   /** APPEND to a persisted BM25 index (d159) — the round-13
@@ -1228,10 +1231,10 @@ object TextAnalysis {
     // lens ⇒ postings); the guards are pure reads, overlapped
     IndexManifest.awaitAll(Seq(
       () => IndexManifest.requireNoOrphans(
-        increment.sparkSession.read.parquet(s"$path/postings"), "doc_id",
+        Tables.readParquet(increment.sparkSession, s"$path/postings"), "doc_id",
         man, path),
       () => IndexManifest.requireNoOrphans(
-        increment.sparkSession.read.parquet(s"$path/lens"), "doc_id",
+        Tables.readParquet(increment.sparkSession, s"$path/lens"), "doc_id",
         man, path)))
     val postings = increment.select(col("doc_id"), explode(w).as("term"))
       .groupBy(col("term"), col("doc_id"))
@@ -1313,8 +1316,8 @@ object TextAnalysis {
         .filter(col("doc_id") <= s.corpusMaxId)
     }
     val lens = snap match {
-      case None => spark.read.parquet(s"$path/lens")
-      case Some(s) => spark.read.parquet(s"$path/lens")
+      case None => Tables.readParquet(spark, s"$path/lens")
+      case Some(s) => Tables.readParquet(spark, s"$path/lens")
         .filter(col("doc_id") <= s.corpusMaxId)
     }
     // coalesce guards the all-terms-absent probe (empty frame → NULL sums)
@@ -1325,7 +1328,7 @@ object TextAnalysis {
       }
     val dfs = postings.agg(dfAggs.head, dfAggs.tail: _*).drop("probe_rows")
     val consts = snap match {
-      case None => spark.read.parquet(s"$path/consts")
+      case None => Tables.readParquet(spark, s"$path/consts")
         .select(col("n_docs").cast("double").as("nd"),
           col("sum_dl").cast("double").as("sum_dl"))
       case Some(s) =>
@@ -1384,8 +1387,8 @@ object TextAnalysis {
         sum(when(col("term") === t, col("tf"))).as(s"tf$i")
       }: _*)
       .filter(terms.indices.map(i => col(s"tf$i").isNotNull).reduce(_ && _))
-    val lens = spark.read.parquet(s"$path/lens")
-    val consts = spark.read.parquet(s"$path/consts")
+    val lens = Tables.readParquet(spark, s"$path/lens")
+    val consts = Tables.readParquet(spark, s"$path/consts")
       .select(col("n_docs").cast("double").as("nd"),
         col("sum_dl").cast("double").as("sum_dl"))
     val dl = col("dl").cast("double")
@@ -1413,7 +1416,7 @@ object TextAnalysis {
       path: String, terms: Seq[String]): DataFrame = {
     val man = graft.sources.IndexManifest.require(path, "bm25")
     val termBuckets = man.params.getOrElse("term_buckets", 0L)
-    val raw = spark.read.parquet(s"$path/postings")
+    val raw = Tables.readParquet(spark, s"$path/postings")
     val scoped =
       if (termBuckets > 0L) {
         val tbs = terms.map(t => graft.operators.Dedup.hash60Jvm(t) % termBuckets)
@@ -1965,9 +1968,9 @@ object TextAnalysis {
     IndexManifest.require(path, "bigram-lm")
     val spark = docs.sparkSession
     scoreWithBigramModel(docs,
-      spark.read.parquet(s"$path/model"),
-      spark.read.parquet(s"$path/ctx"),
-      spark.read.parquet(s"$path/consts").head()
+      Tables.readParquet(spark, s"$path/model"),
+      Tables.readParquet(spark, s"$path/ctx"),
+      Tables.readParquet(spark, s"$path/consts").head()
         .getDecimal(1))
   }
 
@@ -2368,7 +2371,7 @@ object TextAnalysis {
     require(phrase.size >= 2, s"phrase needs >= 2 terms, got $phrase")
     val man = graft.sources.IndexManifest.require(path, "pos-postings")
     val termBuckets = man.params.getOrElse("term_buckets", 0L)
-    val raw = spark.read.parquet(s"$path/postings")
+    val raw = Tables.readParquet(spark, s"$path/postings")
     val scoped =
       if (termBuckets > 0L) {
         val tbs = phrase.map(t => Dedup.hash60Jvm(t) % termBuckets)
@@ -2842,7 +2845,7 @@ object TextAnalysis {
       IndexManifest.isFresh(path, docs, "doc_id")
     } catch { case _: IndexManifestException => false }
     if (!hit) saveSuffixIndex(docs, path, global)
-    (spark.read.parquet(s"$path/sa"), spark.read.parquet(s"$path/lcp"))
+    (Tables.readParquet(spark, s"$path/sa"), Tables.readParquet(spark, s"$path/lcp"))
   }
 
   /** Append an id-monotone increment to a PER-DOCUMENT suffix-array
@@ -2871,9 +2874,9 @@ object TextAnalysis {
     var res: (DataFrame, Seq[(Long, DataFrame)]) = null
     IndexManifest.awaitAll(Seq(
       () => IndexManifest.requireNoOrphans(
-        spark.read.parquet(s"$path/sa"), "doc_id", man, path),
+        Tables.readParquet(spark, s"$path/sa"), "doc_id", man, path),
       () => IndexManifest.requireNoOrphans(
-        spark.read.parquet(s"$path/lcp"), "doc_id", man, path),
+        Tables.readParquet(spark, s"$path/lcp"), "doc_id", man, path),
       () => res = suffixLevels(newDocs)))
     val (sa, levels) = res
     IndexManifest.awaitAll(Seq(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -185,7 +186,7 @@ object Unigram {
       m.params == params && IndexManifest.isFresh(path, docs, "doc_id")
     } catch { case _: IndexManifestException => false }
     if (!hit) saveUnigramModel(docs, path, maxPieceLen, emRounds)
-    spark.read.parquet(s"$path/model")
+    Tables.readParquet(spark, s"$path/model")
   }
 
   /** Persist a trained unigram model (d104) — the tokenizer deployment
@@ -234,7 +235,7 @@ object Unigram {
       path: String, docs: DataFrame): DataFrame = {
     val man = graft.sources.IndexManifest.require(path, "unigram-lm")
     val maxPieceLen = man.params("max_piece_len").toInt
-    val stored = spark.read.parquet(s"$path/segmap")
+    val stored = Tables.readParquet(spark, s"$path/segmap")
     val words = vocab(docs).localCheckpoint(true)
     val known = words.join(stored, Seq("word"))
       .select(col("word"), col("np"))
@@ -248,7 +249,7 @@ object Unigram {
       else {
         val maxWordLen = unseen.agg(max(col("wlen"))).head().getInt(0)
         known.unionByName(
-          viterbi(unseen, spark.read.parquet(s"$path/model"), maxWordLen,
+          viterbi(unseen, Tables.readParquet(spark, s"$path/model"), maxWordLen,
             maxPieceLen)
             .select(col("word"), col("np")))
       }

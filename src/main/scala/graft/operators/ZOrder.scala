@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,7 +87,7 @@ object ZOrder {
     if (inc.isEmpty) return
     val man = inc.man
     IndexManifest.requireNoOrphans(
-      newEvents.sparkSession.read.parquet(s"$path/data"), "event_id", man, path)
+      Tables.readParquet(newEvents.sparkSession, s"$path/data"), "event_id", man, path)
     val bits = man.params("bits").toInt
     val bucketBits = man.params("bucket_bits").toInt
     eventGrid(newEvents, bits)
@@ -142,7 +142,7 @@ object ZOrder {
     val bits = man.params("bits").toInt
     val bucketBits = man.params("bucket_bits").toInt
     val keep = bucketsFor(uxLo, uxHi, tyLo, tyHi, bits, bucketBits)
-    spark.read.parquet(s"$path/data")
+    Tables.readParquet(spark, s"$path/data")
       .filter(col("zbucket").cast("long").isin(keep: _*))
       .filter(col("ux").between(uxLo, uxHi) && col("ty").between(tyLo, tyHi))
       .select(col("event_id"), col("user_id"), col("ts"), col("ux"),

@@ -1467,7 +1467,7 @@ object PipelineQueries {
       val path = indexPath("d50-shards")
       Packing.saveTokenShards(docs, path, SHARD_BUDGET)
       graft.sources.IndexManifest.require(path, "shards")
-      spark.read.parquet(s"$path/shards")
+      Tables.readParquet(spark, s"$path/shards")
         .withColumn("h", Dedup.hash60(col("text")))
         .groupBy(col("shard_id").cast("long").as("shard_id"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -1511,7 +1511,7 @@ object PipelineQueries {
       Packing.saveTokenShards(docs.filter(col("doc_id") <= cut), path, SHARD_BUDGET)
       Packing.appendTokenShards(docs.filter(col("doc_id") > cut), path)
       graft.sources.IndexManifest.requireFresh(path, docs, "doc_id")
-      spark.read.parquet(s"$path/shards")
+      Tables.readParquet(spark, s"$path/shards")
         .withColumn("h", Dedup.hash60(col("text")))
         .groupBy(col("shard_id").cast("long").as("shard_id"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -1792,7 +1792,7 @@ object PipelineQueries {
       require(grow == "append", s"expected append, got $grow")
       require(Packing.curatedShardsSync(docs, sel, path, SHARD_BUDGET)
         == "fresh", "second sync must be fresh")
-      spark.read.parquet(s"$path/shards")
+      Tables.readParquet(spark, s"$path/shards")
         .select(col("doc_id"), col("n_tokens"), col("start_token"),
           col("shard_id").cast("long").as("shard_id"))
         .orderBy(col("doc_id"))
@@ -1923,7 +1923,7 @@ object PipelineQueries {
       val path = indexPath("d88-curated")
       Packing.saveCuratedShards(docs, sel, path, SHARD_BUDGET)
       graft.sources.IndexManifest.require(path, "shards")
-      spark.read.parquet(s"$path/shards")
+      Tables.readParquet(spark, s"$path/shards")
         .select(col("doc_id"), col("n_tokens"), col("start_token"),
           col("shard_id").cast("long").as("shard_id"))
         .orderBy(col("doc_id"))
@@ -2051,7 +2051,7 @@ object PipelineQueries {
       TextAnalysis.saveSuffixIndex(docs.filter(col("doc_id") <= cut), path,
         global = false)
       TextAnalysis.appendSuffixIndex(docs.filter(col("doc_id") > cut), path)
-      spark.read.parquet(s"$path/lcp")
+      Tables.readParquet(spark, s"$path/lcp")
         .select(col("doc_id"), col("rnk"), col("pos"), col("lcp"))
         .orderBy(col("doc_id"), col("rnk"))
     }),
@@ -2069,7 +2069,7 @@ object PipelineQueries {
       val a2 = TextAnalysis.suffixIndexSync(docs, path)
       require(a1 == "append" && a2 == "fresh",
         s"sync policy drifted: got ($a1, $a2), expected (append, fresh)")
-      spark.read.parquet(s"$path/lcp")
+      Tables.readParquet(spark, s"$path/lcp")
         .select(col("doc_id"), col("rnk"), col("pos"), col("lcp"))
         .orderBy(col("doc_id"), col("rnk"))
     }),

@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Load-time mismatch between an index's manifest and what the caller
@@ -161,16 +161,24 @@ object IndexManifest {
     * so appenders call this before writing and fail loudly instead;
     * the index-sync operators recover by rebuilding. The watermark < id
     * filter is answered from parquet row-group stats on id-monotone
-    * stores — a pushed, payload-free scan.
+    * stores — a pushed, payload-free scan. The probe is one Spark job
+    * that stops each partition at its first orphan (a per-partition
+    * `limit(1)`; `Dataset.limit` would re-run its collect over more and
+    * more partitions while none holds a row); the orphans are counted
+    * only for the error message.
     */
   def requireNoOrphans(table: DataFrame, idCol: String, man: Manifest,
       path: String): Unit = {
-    val n = table.filter(col(idCol).cast("long") > man.corpusMaxId).count()
-    if (n > 0L)
+    val orphans = table.filter(col(idCol).cast("long") > man.corpusMaxId)
+    val any = orphans.select(lit(true)).as(Encoders.scalaBoolean)
+      .mapPartitions(_.take(1))(Encoders.scalaBoolean).collect().nonEmpty
+    if (any) {
+      val n = orphans.count()
       throw new IndexManifestException(
         s"index at $path holds $n rows above its manifest watermark " +
           s"${man.corpusMaxId} — a previous append crashed between the data " +
           "write and the manifest flip; rebuild (index sync does this automatically)")
+    }
   }
 
   /** An increment admitted by [[beginAppend]]: the store's manifest,

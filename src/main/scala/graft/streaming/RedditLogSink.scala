@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.RedditLog
+import graft.sources.{RedditLog, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -94,9 +94,9 @@ object RedditLogSink {
     import graft.sources.IndexManifest
     val spark = events.sparkSession
     IndexManifest.require(lmPath, "bigram-lm")
-    val model = spark.read.parquet(s"$lmPath/model").persist()
-    val ctx = spark.read.parquet(s"$lmPath/ctx").persist()
-    val oov = spark.read.parquet(s"$lmPath/consts").head().getDecimal(1)
+    val model = Tables.readParquet(spark, s"$lmPath/model").persist()
+    val ctx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
+    val oov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
     NioCheckpointFileManager.install(spark)
     events.writeStream
       .option("checkpointLocation", checkpointDir)

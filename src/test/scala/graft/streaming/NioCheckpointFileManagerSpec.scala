@@ -6,15 +6,16 @@ import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, ParentNotDirectoryException, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager, HDFSMetadataLog}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming checkpoint file manager (NioCheckpointFileManager doc):
-  * atomic publish, cancel, no-overwrite, scheme dispatch, a metadata-log
-  * round trip through it, and the entry points that install it.
+  * atomic publish, cancel, no-overwrite, scheme dispatch, `mkdirs`, a
+  * metadata-log round trip through it, and the entry points that install
+  * it.
   */
 class NioCheckpointFileManagerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -65,6 +66,41 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     third.close()
     assert(names(dir) == Seq("7"))
     assert(text(new File(dir, "7")) == "newer")
+  }
+
+  test("mkdirs creates nested directories") {
+    val dir = Files.createTempDirectory("nio-ckpt").toFile
+    manager(dir).mkdirs(new Path(new File(dir, "a/b/c").toURI))
+    assert(new File(dir, "a/b/c").isDirectory)
+    assert(names(dir) == Seq("a"))
+  }
+
+  test("mkdirs on an existing directory is a no-op") {
+    val dir = Files.createTempDirectory("nio-ckpt").toFile
+    val sub = new File(dir, "offsets")
+    assert(sub.mkdir())
+    Files.write(new File(sub, "0").toPath, "v1".getBytes(StandardCharsets.UTF_8))
+    manager(dir).mkdirs(new Path(sub.toURI))
+    assert(names(sub) == Seq("0"))
+    assert(text(new File(sub, "0")) == "v1")
+  }
+
+  test("mkdirs with a regular file in the way fails the way Hadoop's does") {
+    val dir = Files.createTempDirectory("nio-ckpt").toFile
+    val file = new File(dir, "f")
+    Files.write(file.toPath, "x".getBytes(StandardCharsets.UTF_8))
+    val hadoop = new FileSystemBasedCheckpointFileManager(new Path(dir.toURI), new Configuration())
+    for ((target, expected) <- Seq(
+        file -> classOf[FileAlreadyExistsException],
+        new File(file, "sub/x") -> classOf[ParentNotDirectoryException])) {
+      val path = new Path(target.toURI)
+      val theirs = intercept[Exception](hadoop.mkdirs(path))
+      val ours = intercept[Exception](manager(dir).mkdirs(path))
+      assert(theirs.getClass == expected, theirs)
+      assert(ours.getClass == expected, ours)
+    }
+    assert(file.isFile && text(file) == "x")
+    assert(names(dir) == Seq("f"), names(dir))
   }
 
   test("a path of another scheme takes Spark's rename-based stream") {
