@@ -202,6 +202,33 @@ object Dedup {
     sig.select(col("doc_id") +: bandCols: _*)
   }
 
+  /** The LSH band stage behind [[lshCandidates]], [[lshBandCurve]] and
+    * [[bandRows]]: long-format band rows (doc_id, bno, bkey) over the
+    * first `nb` band columns of a banded signature. One posexplode pass
+    * instead of an nb-way union, so the banded signature subtree is
+    * evaluated once, not nb times.
+    *
+    * With `maxBucket`, rows of buckets holding more than that many docs
+    * are dropped. The guard is a window count over (bno, bkey): ONE
+    * exchange on exactly the keys a band self-join needs, so both join
+    * sides reuse it — versus a groupBy + semi-join which adds two more
+    * shuffles of the same data.
+    */
+  private def bandStage(banded: DataFrame, nb: Int,
+      maxBucket: Option[Long] = None): DataFrame = {
+    val long = banded.select(col("doc_id"),
+      posexplode(array((0 until nb).map(b => col(s"band$b")): _*))
+        .as(Seq("bno", "bkey")))
+    maxBucket.fold(long) { cap =>
+      long
+        .withColumn("bucket_n", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("bno"), col("bkey"))))
+        .filter(col("bucket_n") <= cap)
+        .drop("bucket_n")
+    }
+  }
+
   /** Candidate pairs (a < b) sharing at least one band bucket. The join is
     * keyed on (band position, band key) — a shuffle hash join whose
     * fan-out is bounded by bucket sizes, not the corpus size.
@@ -213,21 +240,7 @@ object Dedup {
     */
   def lshCandidates(banded: DataFrame, bands: Int,
       maxBucket: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // one posexplode pass instead of a bands-way union: the banded
-    // signature subtree is evaluated once, not `bands` times
-    val long = banded.select(col("doc_id"),
-      posexplode(array((0 until bands).map(b => col(s"band$b")): _*))
-        .as(Seq("bno", "bkey")))
-    // bucket-size guard as a window count over (bno, bkey): ONE exchange
-    // on exactly the keys the self-join below needs, so both join sides
-    // reuse it — versus a groupBy + semi-join which adds two more
-    // shuffles of the same data
-    val bounded = long
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("bno"), col("bkey"))))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
+    val bounded = bandStage(banded, bands, Some(maxBucket))
     val x = bounded.as("x")
     val y = bounded.as("y")
     x.join(y, col("x.bno") === col("y.bno") && col("x.bkey") === col("y.bkey")
@@ -1824,16 +1837,7 @@ object Dedup {
     // prefix) tags each pair with min(bno); each arm is a filter over
     // the one materialized pair table — candidate sets per arm are
     // unchanged.
-    val maxNb = bandCounts.max
-    val long = banded.select(col("doc_id"),
-      posexplode(array((0 until maxNb).map(b => col(s"band$b")): _*))
-        .as(Seq("bno", "bkey")))
-    val bounded = long
-      .withColumn("bucket_n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("bno"), col("bkey"))))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
+    val bounded = bandStage(banded, bandCounts.max, Some(maxBucket))
     // every arm reads this (semi-join leg) — shared under the size
     // budget, gated on the scan-rooted docs (shareSmall doc): the
     // banded pair table is a candidate-pair blowup that must not be
@@ -1938,13 +1942,11 @@ object Dedup {
 
   // ---- persisted MinHash-LSH dedup index (d77/d78/d79) ----
 
-  /** Long-format band rows (doc_id, bno, bkey) from a k-wide signature —
-    * one posexplode pass, same band construction as [[bandKeys]].
+  /** Long-format band rows (doc_id, bno, bkey) from a k-wide signature:
+    * [[bandKeys]], then the uncapped [[bandStage]].
     */
   def bandRows(sig: DataFrame, k: Int, bands: Int): DataFrame =
-    bandKeys(sig, k, bands).select(col("doc_id"),
-      posexplode(array((0 until bands).map(b => col(s"band$b")): _*))
-        .as(Seq("bno", "bkey")))
+    bandStage(bandKeys(sig, k, bands), bands)
 
   /** PERSIST the MinHash-LSH dedup index (the build half of d77) — the
     * production shape of fuzzy dedup against a historical corpus: the

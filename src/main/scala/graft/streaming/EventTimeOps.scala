@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.sources.Tables
+import graft.operators.{Classifier, Dedup, TextAnalysis}
+import graft.sources.{IndexManifest, Tables}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -162,6 +163,94 @@ object EventTimeOps {
       .select(col("window.start").as("window_start"),
         col("n_events"), col("n_scored"), col("p50"), col("p95"))
 
+  /** `stream`'s writer, calling `f` on each NON-EMPTY micro-batch:
+    * watermark-advance batches carry no rows, so they get no decisions,
+    * no broadcasts and no sink call (and `stat.bloomFilter` NPEs on an
+    * empty frame).
+    */
+  private[streaming] def eachBatch(stream: DataFrame)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      if (!batch.isEmpty) f(batch, batchId)
+    }
+
+  // ---- the five ingest gates, each defined once ----
+  //
+  // A gate definition runs at stream build: it checks its artifact's
+  // manifest, then loads and persists the artifact. The function it
+  // returns judges one batch: (doc_id, text) → the gate's verdict frame.
+  // The standalone `*GateIngest` operators emit that frame, the chain
+  // projects it to its `ok_*` bit, and RedditLogSink.appendStreamGated
+  // drops what the LM gate drops.
+
+  /** Quality rules (d56): the full rule row (doc_id, signals, rule
+    * bits, keep) of [[graft.operators.TextAnalysis.gopherRules]]. Pure
+    * scan-side expressions; no artifact.
+    */
+  private[streaming] def rulesGate(stopWords: Seq[String]): DataFrame => DataFrame =
+    docs => TextAnalysis.gopherRules(docs.select(col("doc_id"), col("text")), stopWords)
+
+  /** Persisted perceptron ([[graft.operators.Classifier.saveClassifier]]):
+    * (doc_id, margin, keep = margin > 0), one margin aggregation against
+    * the B+1-row weight table, which loads once, broadcast and persisted.
+    */
+  private[streaming] def classifierGate(spark: SparkSession,
+      clsPath: String): DataFrame => DataFrame = {
+    val nBuckets = IndexManifest.require(clsPath, "perceptron")
+      .params("n_buckets").toInt
+    val wdf = broadcast(Tables.readParquet(spark, s"$clsPath/weights")
+      .withColumnRenamed("w", "wt")).persist()
+    docs => Classifier.hashedFeatures(docs.select(col("doc_id"), col("text")), nBuckets)
+      .join(wdf, Seq("bucket"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("x") * col("wt")).cast("long").as("margin"))
+      .select(col("doc_id"), col("margin"), (col("margin") > 0).as("keep"))
+  }
+
+  /** Persisted bigram LM ([[graft.operators.TextAnalysis.saveBigramLm]],
+    * scored by [[graft.operators.TextAnalysis.scoreWithBigramModel]]):
+    * (doc_id, avg_nll, keep = avg_nll ≤ maxAvgNll). Docs too short to
+    * have bigrams score null and are kept. The model tables load once
+    * and stay persisted.
+    */
+  private[streaming] def lmGate(spark: SparkSession, lmPath: String,
+      maxAvgNll: Double): DataFrame => DataFrame = {
+    IndexManifest.require(lmPath, "bigram-lm")
+    val model = Tables.readParquet(spark, s"$lmPath/model").persist()
+    val ctx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
+    val oov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
+    docs => docs.select(col("doc_id"))
+      .join(TextAnalysis.scoreWithBigramModel(
+          docs.select(col("doc_id"), col("text")), model, ctx, oov)
+        .select(col("doc_id"), col("avg_nll")), Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("avg_nll"),
+        (col("avg_nll").isNull || col("avg_nll") <= maxAvgNll).as("keep"))
+  }
+
+  /** Persisted MinHash-LSH index ([[graft.operators.Dedup.saveLshIndex]],
+    * probed by [[graft.operators.Dedup.probeWithLshIndex]]):
+    * (doc_id, n_cand, dup_of, best_est, is_dup, keep = !is_dup). Docs
+    * too short to shingle carry a null verdict and are kept. The index
+    * frames load, bucket-capped, once and stay persisted.
+    */
+  private[streaming] def fuzzyGate(spark: SparkSession, indexPath: String,
+      threshold: Double, maxBucket: Long): DataFrame => DataFrame = {
+    val m = IndexManifest.require(indexPath, "lsh")
+    val (k, bands) = (m.params("k").toInt, m.params("bands").toInt)
+    val hsig = Tables.readParquet(spark, s"$indexPath/sig").persist()
+    val hbands = Tables.readParquet(spark, s"$indexPath/bands")
+    val ok = hbands.groupBy(col("bno"), col("bkey"))
+      .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
+      .select(col("bno"), col("bkey"))
+    val hb = hbands.join(ok, Seq("bno", "bkey")).persist()
+    docs => docs.select(col("doc_id"))
+      .join(Dedup.probeWithLshIndex(docs.select(col("doc_id"), col("text")),
+        hsig, hb, k, bands, threshold), Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("n_cand"), col("dup_of"),
+        col("best_est"), col("is_dup"),
+        (!coalesce(col("is_dup"), lit(false))).as("keep"))
+  }
+
   /** Observable lifecycle of one [[bloomDedupIngest]] stream: batch
     * count and every per-batch broadcast handle AFTER its destroy — so
     * specs (and ops dashboards) can assert that executor memory carries
@@ -173,6 +262,87 @@ object EventTimeOps {
     @volatile private[streaming] var batches: Long = 0L
     def batchesProcessed: Long = batches
     def destroyedBroadcasts: Seq[Broadcast[BloomFilter]] = destroyed.asScala.toSeq
+  }
+
+  /** Exact dedup against a history corpus (d11's Bloom probe with exact
+    * verify), the gate definition behind [[bloomDedupIngest]] and
+    * [[chainedGateIngest]].
+    *
+    * Built once per stream: the history's distinct content digests are
+    * persisted and stay PINNED for the stream's lifetime — every batch's
+    * exact-verify join reads them, so no batch re-scans history or
+    * recomputes sha2 + distinct. The history master sketch is built from
+    * them by one distributed treeAggregate; the accepted master starts
+    * empty on the driver.
+    */
+  private[streaming] final class BloomGate(history: DataFrame,
+      expectedItems: Long, fpp: Double) {
+    private val histDigests = history
+      .select(sha2(col("text"), 256).as("digest"))
+      .filter(col("digest").isNotNull).distinct().persist()
+    private val histMaster = histDigests.stat.bloomFilter("digest", expectedItems, fpp)
+    private val accMaster = BloomFilter.create(expectedItems, fpp)
+    val handle = new BloomIngestHandle
+
+    /** `stream` with its content `digest`, minus its exact duplicates
+      * within the watermark horizon (null digests are keyed by doc_id,
+      * so null text is never "equal" to other null text — the d11
+      * NULL-never-dups policy).
+      */
+    def withinWatermark(stream: DataFrame, lateness: String,
+        timeCol: String): DataFrame =
+      stream
+        .withColumn("event_time", timestamp_seconds(col(timeCol)))
+        .withWatermark("event_time", lateness)
+        .withColumn("digest", sha2(col("text"), 256))
+        .withColumn("dedup_key",
+          coalesce(col("digest"), concat(lit("null:"), col("doc_id"))))
+        .dropDuplicatesWithinWatermark("dedup_key")
+
+    /** One batch under fresh broadcasts of both sketches. `body` gets
+      * the verdict kernel, (doc_id, digest) → (doc_id, is_dup,
+      * dup_kind), and returns the batch's ACCEPTED rows with their
+      * `digest`. Those digests fold into the accepted master through a
+      * sketch of the batch alone (same (expectedItems, fpp), so it
+      * merges). The broadcasts are destroyed, and recorded in
+      * [[handle]], however `body` ends.
+      */
+    def onBatch(body: (DataFrame => DataFrame) => DataFrame): Unit = {
+      val sc = history.sparkSession.sparkContext
+      val bcHist = sc.broadcast(histMaster)
+      val bcAcc = sc.broadcast(accMaster)
+      try {
+        val hitHist = udf((d: String) => d != null && bcHist.value.mightContainString(d))
+        val hitAcc = udf((d: String) => d != null && bcAcc.value.mightContainString(d))
+        val accepted = body { docs =>
+          val digests = docs.select(col("doc_id"), col("digest"))
+          // misses of BOTH sketches short-circuit scan-side (no false
+          // negatives → provably clean) and never shuffle
+          digests.filter(!hitHist(col("digest")) && !hitAcc(col("digest")))
+            .select(col("doc_id"), lit(false).as("is_dup"),
+              lit(null).cast("string").as("dup_kind"))
+            .unionByName(digests
+              .filter(hitHist(col("digest")) || hitAcc(col("digest")))
+              .withColumn("acc_hit", hitAcc(col("digest")))
+              .join(histDigests.withColumn("hist_mark", lit(true)),
+                Seq("digest"), "left_outer")
+              .select(col("doc_id"),
+                (coalesce(col("hist_mark"), lit(false)) || col("acc_hit")).as("is_dup"),
+                when(coalesce(col("hist_mark"), lit(false)), lit("history"))
+                  .when(col("acc_hit"), lit("ingested"))
+                  .otherwise(lit(null).cast("string")).as("dup_kind")))
+        }.filter(col("digest").isNotNull)
+        // a batch that accepts nothing folds nothing (an empty-frame
+        // sketch build would NPE)
+        if (!accepted.isEmpty)
+          accMaster.mergeInPlace(
+            accepted.stat.bloomFilter("digest", expectedItems, fpp))
+        handle.batches += 1
+      } finally {
+        bcHist.destroy(); bcAcc.destroy()
+        handle.destroyed.add(bcHist); handle.destroyed.add(bcAcc)
+      }
+    }
   }
 
   /** Ingest-time curation twin of the batch keep-list — the streaming
@@ -203,7 +373,8 @@ object EventTimeOps {
     *    built by one distributed treeAggregate before the first batch;
     *    micro-batches never re-scan history to build sketches (the
     *    exact-verify join scans only the hit stream against the history
-    *    digest relation);
+    *    digest relation, which stays persisted for the stream's
+    *    lifetime — [[BloomGate]]);
     *  - per batch, both sketches are broadcast, applied scan-side, and
     *    DESTROYED once the caller's `sink` returns (the sink must
     *    materialize the decisions first — foreachBatch output is
@@ -222,66 +393,15 @@ object EventTimeOps {
       expectedItems: Long = 1000000L, fpp: Double = 0.03,
       lateness: String = "2 minutes", timeCol: String = "created_utc")(
       sink: (DataFrame, Long) => Unit): (DataStreamWriter[Row], BloomIngestHandle) = {
-    val spark = history.sparkSession
-    val sc = spark.sparkContext
-    val histDigests = history
-      .select(sha2(col("text"), 256).as("digest"))
-      .filter(col("digest").isNotNull).distinct()
-    val histMaster = histDigests.stat.bloomFilter("digest", expectedItems, fpp)
-    val accMaster = BloomFilter.create(expectedItems, fpp)
-    val handle = new BloomIngestHandle
-    val deduped = stream
-      .withColumn("event_time", timestamp_seconds(col(timeCol)))
-      .withWatermark("event_time", lateness)
-      .withColumn("digest", sha2(col("text"), 256))
-      .withColumn("dedup_key",
-        coalesce(col("digest"), concat(lit("null:"), col("doc_id"))))
-      .dropDuplicatesWithinWatermark("dedup_key")
-    val writer = deduped.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      // watermark-advance batches carry no rows: no decisions, no
-      // broadcasts (and stat.bloomFilter NPEs on an empty frame)
-      if (!batch.isEmpty) {
-      val bcHist = sc.broadcast(histMaster)
-      val bcAcc = sc.broadcast(accMaster)
-      try {
-        val hitHist = udf((d: String) => d != null && bcHist.value.mightContainString(d))
-        val hitAcc = udf((d: String) => d != null && bcAcc.value.mightContainString(d))
-        val digests = batch.select(col("doc_id"), col("digest"))
-        // misses of BOTH sketches short-circuit scan-side (no false
-        // negatives → provably clean) and never shuffle
-        val clean = digests.filter(!hitHist(col("digest")) && !hitAcc(col("digest")))
-          .select(col("doc_id"), lit(false).as("is_dup"),
-            lit(null).cast("string").as("dup_kind"))
-        val suspects = digests
-          .filter(hitHist(col("digest")) || hitAcc(col("digest")))
-          .withColumn("acc_hit", hitAcc(col("digest")))
-          .join(histDigests.withColumn("hist_mark", lit(true)),
-            Seq("digest"), "left_outer")
-          .select(col("doc_id"),
-            (coalesce(col("hist_mark"), lit(false)) || col("acc_hit")).as("is_dup"),
-            when(coalesce(col("hist_mark"), lit(false)), lit("history"))
-              .when(col("acc_hit"), lit("ingested"))
-              .otherwise(lit(null).cast("string")).as("dup_kind"))
-        val out = clean.unionByName(suspects)
+    val bloom = new BloomGate(history, expectedItems, fpp)
+    val writer = eachBatch(bloom.withinWatermark(stream, lateness, timeCol)) {
+      (batch, batchId) => bloom.onBatch { verdict =>
+        val out = verdict(batch)
         sink(out, batchId)
-        // fold THIS batch's accepted digests into the accepted master:
-        // a sketch over the micro-batch alone, merged driver-side
-        // (all-dup batches accept nothing — and an empty-frame sketch
-        // build would NPE)
-        val acceptedDigests = out.filter(!col("is_dup"))
-          .join(digests, Seq("doc_id"))
-          .filter(col("digest").isNotNull)
-        if (!acceptedDigests.isEmpty)
-          accMaster.mergeInPlace(
-            acceptedDigests.stat.bloomFilter("digest", expectedItems, fpp))
-        handle.batches += 1
-      } finally {
-        bcHist.destroy(); bcAcc.destroy()
-        handle.destroyed.add(bcHist); handle.destroyed.add(bcAcc)
-      }
+        out.filter(!col("is_dup")).join(batch.select(col("doc_id"), col("digest")), Seq("doc_id"))
       }
     }
-    (writer, handle)
+    (writer, bloom.handle)
   }
 
   /** CCNet's perplexity filter running AT INGEST: every micro-batch is
@@ -289,7 +409,7 @@ object EventTimeOps {
     * [[graft.operators.TextAnalysis.saveBigramLm]] store and split
     * keep/drop by an `avg_nll` ceiling — the curation twin of
     * [[bloomDedupIngest]], gating on quality instead of duplication.
-    * The scoring kernel is the BATCH operator verbatim
+    * The scoring kernel is the BATCH operator
     * ([[graft.operators.TextAnalysis.scoreWithBigramModel]] — the
     * batch-twin discipline every streaming op here follows), so the
     * gate's semantics are the oracle-verified d49 semantics per batch.
@@ -308,39 +428,10 @@ object EventTimeOps {
   def lmQualityGateIngest(stream: DataFrame, lmPath: String,
       maxAvgNll: Double)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    import graft.operators.TextAnalysis
-    import graft.sources.IndexManifest
-    val spark = stream.sparkSession
-    IndexManifest.require(lmPath, "bigram-lm")
-    val model = Tables.readParquet(spark, s"$lmPath/model").persist()
-    val ctx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
-    val oov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val scores = TextAnalysis.scoreWithBigramModel(
-          batch.select(col("doc_id"), col("text")), model, ctx, oov)
-        val decisions = batch.select(col("doc_id"))
-          .join(scores.select(col("doc_id"), col("avg_nll")),
-            Seq("doc_id"), "left_outer")
-          .select(col("doc_id"), col("avg_nll"),
-            (col("avg_nll").isNull || col("avg_nll") <= maxAvgNll).as("keep"))
-        sink(decisions, batchId)
-      }
-    }
+    val lm = lmGate(stream.sparkSession, lmPath, maxAvgNll)
+    eachBatch(stream)((batch, batchId) => sink(lm(batch), batchId))
   }
 
-  /** Quality-RULES gate at ingest — the d56 Gopher filter as the third
-    * member of the ingest-gate family (bloomDedupIngest drops
-    * duplicates, [[lmQualityGateIngest]] drops high-perplexity, this
-    * drops published-rule violators): each micro-batch runs the batch
-    * kernel VERBATIM ([[graft.operators.TextAnalysis.gopherRules]]).
-    * The rules are pure scan-side expressions, so the gate is even
-    * lighter than the LM's — nothing to persist, no join, no keyed
-    * state, no watermark; one projection added per batch.
-    *
-    * Emits per non-empty batch via `sink`: the full rule row
-    * (doc_id, signals, rule bits, keep).
-    */
   /** Streaming KS DRIFT monitor — the live twin of the d149 batch test
     * (the shape a serving pipeline runs against every incoming slice:
     * "does this batch's numeric distribution still look like the
@@ -358,14 +449,12 @@ object EventTimeOps {
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val ref = reference.select(col("value").cast("double").as("value"))
       .localCheckpoint(true)
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val merged = ref.withColumn("isA", lit(true))
-          .unionByName(batch.select(col("value").cast("double").as("value"))
-            .withColumn("isA", lit(false)))
-        sink(graft.operators.Sampling.ksTwoSample(
-          merged, col("isA"), col("value")), batchId)
-      }
+    eachBatch(stream) { (batch, batchId) =>
+      val merged = ref.withColumn("isA", lit(true))
+        .unionByName(batch.select(col("value").cast("double").as("value"))
+          .withColumn("isA", lit(false)))
+      sink(graft.operators.Sampling.ksTwoSample(
+        merged, col("isA"), col("value")), batchId)
     }
   }
 
@@ -395,24 +484,21 @@ object EventTimeOps {
     */
   def tokenDriftIngest(stream: DataFrame, reference: DataFrame)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    import graft.operators.TextAnalysis
     val refCounts = reference
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("ca"))
       .localCheckpoint(true)
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val batchCounts = batch
-          .select(explode(split(col("text"), " ")).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("cb"))
-        // full outer: reference-only words carry cb = 0 (OOV-ref mass),
-        // batch-only words ca = 0 (OOV-new mass) — exactly the count
-        // frame the batch kernel builds from the merged token stream
-        val counts = refCounts.join(batchCounts, Seq("word"), "full_outer")
-          .select(col("word"), coalesce(col("ca"), lit(0L)).as("ca"),
-            coalesce(col("cb"), lit(0L)).as("cb"))
-        sink(TextAnalysis.tokenDriftFromCounts(counts), batchId)
-      }
+    eachBatch(stream) { (batch, batchId) =>
+      val batchCounts = batch
+        .select(explode(split(col("text"), " ")).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("cb"))
+      // full outer: reference-only words carry cb = 0 (OOV-ref mass),
+      // batch-only words ca = 0 (OOV-new mass) — exactly the count
+      // frame the batch kernel builds from the merged token stream
+      val counts = refCounts.join(batchCounts, Seq("word"), "full_outer")
+        .select(col("word"), coalesce(col("ca"), lit(0L)).as("ca"),
+          coalesce(col("cb"), lit(0L)).as("cb"))
+      sink(TextAnalysis.tokenDriftFromCounts(counts), batchId)
     }
   }
 
@@ -442,26 +528,33 @@ object EventTimeOps {
       .select(col("dim"), col("n").as("na"),
         col("sx").as("sxa"), col("sxx").as("sxxa"))
       .localCheckpoint(true)
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val batchStats = Similarity.embedStats(batch)
-          .select(col("dim"), col("n").as("nb"),
-            col("sx").as("sxb"), col("sxx").as("sxxb"))
-        sink(Similarity.embedDriftFromStats(refStats, batchStats), batchId)
-      }
+    eachBatch(stream) { (batch, batchId) =>
+      val batchStats = Similarity.embedStats(batch)
+        .select(col("dim"), col("n").as("nb"),
+          col("sx").as("sxb"), col("sxx").as("sxxb"))
+      sink(Similarity.embedDriftFromStats(refStats, batchStats), batchId)
     }
   }
 
+  /** Quality-RULES gate at ingest — the d56 Gopher filter as the third
+    * member of the ingest-gate family (bloomDedupIngest drops
+    * duplicates, [[lmQualityGateIngest]] drops high-perplexity, this
+    * drops published-rule violators): each micro-batch runs the batch
+    * kernel ([[graft.operators.TextAnalysis.gopherRules]], through
+    * [[rulesGate]]). The rules are pure scan-side expressions, so the
+    * gate is even lighter than the LM's — nothing to persist, no join,
+    * no keyed state, no watermark; one projection added per batch.
+    *
+    * Emits per non-empty batch via `sink`: the full rule row
+    * (doc_id, signals, rule bits, keep).
+    */
   def rulesGateIngest(stream: DataFrame,
       stopWords: Seq[String] =
         Seq("the", "be", "to", "of", "and", "that", "have", "with"))(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        sink(graft.operators.TextAnalysis.gopherRules(
-          batch.select(col("doc_id"), col("text")), stopWords), batchId)
-      }
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val rules = rulesGate(stopWords)
+    eachBatch(stream)((batch, batchId) => sink(rules(batch), batchId))
+  }
 
   /** CLASSIFIER gate at ingest — the fourth ingest-gate family member
     * (bloom drops duplicates, LM drops high-perplexity, rules drop
@@ -478,24 +571,8 @@ object EventTimeOps {
     */
   def classifierGateIngest(stream: DataFrame, clsPath: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    import graft.operators.Classifier
-    import graft.sources.IndexManifest
-    val spark = stream.sparkSession
-    val m = IndexManifest.require(clsPath, "perceptron")
-    val nBuckets = m.params("n_buckets").toInt
-    val wdf = broadcast(Tables.readParquet(spark, s"$clsPath/weights")
-      .withColumnRenamed("w", "wt")).persist()
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val margins = Classifier
-          .hashedFeatures(batch.select(col("doc_id"), col("text")), nBuckets)
-          .join(wdf, Seq("bucket"))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("x") * col("wt")).cast("long").as("margin"))
-        sink(margins.select(col("doc_id"), col("margin"),
-          (col("margin") > 0).as("keep")), batchId)
-      }
-    }
+    val cls = classifierGate(stream.sparkSession, clsPath)
+    eachBatch(stream)((batch, batchId) => sink(cls(batch), batchId))
   }
 
   /** FUZZY-DEDUP gate at ingest — the fifth ingest-gate family member
@@ -503,7 +580,7 @@ object EventTimeOps {
     * drop violators, the classifier drops model-rejected docs; this
     * drops near-duplicates OF HISTORY by content): each micro-batch is
     * probed against a persisted [[graft.operators.Dedup.saveLshIndex]]
-    * artifact with the batch kernel VERBATIM
+    * artifact with the batch kernel
     * ([[graft.operators.Dedup.probeWithLshIndex]]) — MinHash the batch,
     * band-join the index, signature-agreement estimate, verdict.
     *
@@ -524,30 +601,8 @@ object EventTimeOps {
   def fuzzyDedupGateIngest(stream: DataFrame, indexPath: String,
       threshold: Double = 0.5, maxBucket: Long = 1000L)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    import graft.operators.Dedup
-    import graft.sources.IndexManifest
-    val spark = stream.sparkSession
-    val m = IndexManifest.require(indexPath, "lsh")
-    val k = m.params("k").toInt
-    val bands = m.params("bands").toInt
-    val hsig = Tables.readParquet(spark, s"$indexPath/sig").persist()
-    val hbands = Tables.readParquet(spark, s"$indexPath/bands")
-    val ok = hbands.groupBy(col("bno"), col("bkey"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
-      .select(col("bno"), col("bkey"))
-    val hb = hbands.join(ok, Seq("bno", "bkey")).persist()
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val verdicts = Dedup.probeWithLshIndex(
-          batch.select(col("doc_id"), col("text")), hsig, hb, k, bands,
-          threshold)
-        sink(batch.select(col("doc_id"))
-          .join(verdicts, Seq("doc_id"), "left_outer")
-          .select(col("doc_id"), col("n_cand"), col("dup_of"),
-            col("best_est"), col("is_dup"),
-            (!coalesce(col("is_dup"), lit(false))).as("keep")), batchId)
-      }
-    }
+    val fuzzy = fuzzyGate(stream.sparkSession, indexPath, threshold, maxBucket)
+    eachBatch(stream)((batch, batchId) => sink(fuzzy(batch), batchId))
   }
 
   /** TRAINING-SHARD STORE ingest — the ingest family's STORE-WRITER
@@ -580,11 +635,8 @@ object EventTimeOps {
     */
   def shardStoreIngest(stream: DataFrame, path: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val out = shardIngestBatch(batch.toDF(), path, batchId)
-        sink(out, batchId)
-      }
+    eachBatch(stream) { (batch, batchId) =>
+      sink(shardIngestBatch(batch, path, batchId), batchId)
     }
 
   /** The per-epoch body of [[shardStoreIngest]] (package-visible so the
@@ -594,7 +646,6 @@ object EventTimeOps {
     */
   private[streaming] def shardIngestBatch(batch: DataFrame, path: String,
       batchId: Long): DataFrame = {
-    import graft.sources.IndexManifest
     val spark = batch.sparkSession
     import spark.implicits._
     val applied = IndexManifest.read(path).params.get("last_batch_id")
@@ -615,11 +666,11 @@ object EventTimeOps {
     * SHORT-CIRCUIT: a document dropped by an earlier gate never reaches
     * a later gate's kernel. On a drop-heavy stream the chain therefore
     * prices near its cheap members instead of the sum of all five
-    * (BENCH_NOTES.md, "Round 11: the chained gate priced"), while every
-    * kernel stays the oracle-verified batch operator VERBATIM (gopherRules,
-    * the bloom probe + exact-verify, the persisted perceptron margin,
-    * scoreWithBigramModel, probeWithLshIndex — the batch-twin
-    * discipline each standalone gate follows).
+    * (BENCH_NOTES.md, "Round 11: the chained gate priced"). Each stage
+    * calls the same gate definition as the standalone gate
+    * ([[rulesGate]], [[BloomGate]], [[classifierGate]], [[lmGate]],
+    * [[fuzzyGate]]) and keeps only its verdict bit, so a chained
+    * verdict cannot drift from the standalone one.
     *
     * Ordering rationale (cost-per-doc, measured round 10): rules are
     * pure scan-side expressions (×2.2); the exact-dedup probe is two
@@ -656,153 +707,63 @@ object EventTimeOps {
       expectedItems: Long = 1000000L, fpp: Double = 0.03,
       lateness: String = "2 minutes", timeCol: String = "created_utc")(
       sink: (DataFrame, Long) => Unit): (DataStreamWriter[Row], BloomIngestHandle) = {
-    import graft.operators.{Classifier, Dedup, TextAnalysis}
-    import graft.sources.IndexManifest
     val spark = history.sparkSession
-    val sc = spark.sparkContext
-    // every artifact loads once at stream build — the standalone gates'
-    // own load discipline, shared
-    val nBuckets = IndexManifest.require(clsPath, "perceptron")
-      .params("n_buckets").toInt
-    val wdf = broadcast(Tables.readParquet(spark, s"$clsPath/weights")
-      .withColumnRenamed("w", "wt")).persist()
-    IndexManifest.require(lmPath, "bigram-lm")
-    val lmModel = Tables.readParquet(spark, s"$lmPath/model").persist()
-    val lmCtx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
-    val lmOov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
-    val lshMan = IndexManifest.require(lshPath, "lsh")
-    val (lshK, lshBands) =
-      (lshMan.params("k").toInt, lshMan.params("bands").toInt)
-    val hsig = Tables.readParquet(spark, s"$lshPath/sig").persist()
-    val hbandsRaw = Tables.readParquet(spark, s"$lshPath/bands")
-    val okBuckets = hbandsRaw.groupBy(col("bno"), col("bkey"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
-      .select(col("bno"), col("bkey"))
-    val hb = hbandsRaw.join(okBuckets, Seq("bno", "bkey")).persist()
-    // persisted: the exact-verify join hits this every batch
-    val histDigests = history.select(sha2(col("text"), 256).as("digest"))
-      .filter(col("digest").isNotNull).distinct().persist()
-    val histMaster = histDigests.stat.bloomFilter("digest", expectedItems, fpp)
-    val accMaster = BloomFilter.create(expectedItems, fpp)
-    val handle = new BloomIngestHandle
-    val prepped = stream
-      .withColumn("event_time", timestamp_seconds(col(timeCol)))
-      .withWatermark("event_time", lateness)
-      .withColumn("digest", sha2(col("text"), 256))
-      .withColumn("dedup_key",
-        coalesce(col("digest"), concat(lit("null:"), col("doc_id"))))
-      .dropDuplicatesWithinWatermark("dedup_key")
-    val writer = prepped.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val bcHist = sc.broadcast(histMaster)
-        val bcAcc = sc.broadcast(accMaster)
-        try {
-          // per-stage verdict frames are (doc_id, bit) — eagerly
-          // checkpointed so the decisions join and the next stage's
-          // semi-join don't each replay the whole upstream chain. The
-          // short-circuit is DRIVER-SIDE too: a stage whose input is
-          // empty contributes an empty verdict WITHOUT planning its
-          // kernel — the LM's vocabulary-scale model join and the LSH
-          // band join cost real per-batch work even over zero probe
-          // rows (the index side still plans/scans), which on an
-          // all-drop batch would make the "short-circuited" chain pay
-          // every gate's fixed cost anyway (measured: the round-11
-          // pricing's first cut ran 8× the LSH-alone gate on exactly
-          // that regime).
-          val docs = batch.select(col("doc_id"), col("text"), col("digest"))
-            .localCheckpoint(true)
-          // survivor sets are checkpointed too: each is read by the next
-          // kernel AND the next survivor join AND its own emptiness
-          // check — left lazy, the semi-join trees nest and the replay
-          // overhead exceeds what the short-circuit saves (measured in
-          // the round-11 pricing's second cut)
-          def survivors(prev: DataFrame, verdict: DataFrame, bit: String) =
-            prev.join(verdict.filter(col(bit)).select("doc_id"),
-              Seq("doc_id"), "left_semi").localCheckpoint(true)
-          def stage(in: DataFrame, bit: String)(kernel: => DataFrame): DataFrame =
-            if (in.isEmpty)
-              in.select(col("doc_id"), lit(true).as(bit)).limit(0)
-                .localCheckpoint(true)
-            else kernel.localCheckpoint(true)
-          // 1 — rules: pure scan-side expressions
-          val rulesV = stage(docs, "ok_rules") {
-            TextAnalysis.gopherRules(
-              docs.select(col("doc_id"), col("text")), stopWords)
-              .select(col("doc_id"), col("keep").as("ok_rules"))
-          }
-          val s1 = survivors(docs, rulesV, "ok_rules")
-          // 2 — exact dedup: sketch probes scan-side, hits exact-verified
-          val hitHist = udf((d: String) => d != null && bcHist.value.mightContainString(d))
-          val hitAcc = udf((d: String) => d != null && bcAcc.value.mightContainString(d))
-          val exactV = stage(s1, "ok_exact") {
-            val dg = s1.select(col("doc_id"), col("digest"))
-            dg.filter(!hitHist(col("digest")) && !hitAcc(col("digest")))
-              .select(col("doc_id"), lit(true).as("ok_exact"))
-              .unionByName(dg
-                .filter(hitHist(col("digest")) || hitAcc(col("digest")))
-                .withColumn("acc_hit", hitAcc(col("digest")))
-                .join(histDigests.withColumn("hist_mark", lit(true)),
-                  Seq("digest"), "left_outer")
-                .select(col("doc_id"),
-                  (!(coalesce(col("hist_mark"), lit(false)) || col("acc_hit")))
-                    .as("ok_exact")))
-          }
-          val s2 = survivors(s1, exactV, "ok_exact")
-          // 3 — classifier: B+1-row broadcast margin
-          val clsV = stage(s2, "ok_cls") {
-            Classifier.hashedFeatures(
-              s2.select(col("doc_id"), col("text")), nBuckets)
-              .join(wdf, Seq("bucket"))
-              .groupBy(col("doc_id"))
-              .agg(sum(col("x") * col("wt")).cast("long").as("margin"))
-              .select(col("doc_id"), (col("margin") > 0).as("ok_cls"))
-          }
-          val s3 = survivors(s2, clsV, "ok_cls")
-          // 4 — LM perplexity ceiling (short docs kept — its convention)
-          val lmV = stage(s3, "ok_lm") {
-            s3.select(col("doc_id"))
-              .join(TextAnalysis.scoreWithBigramModel(
-                  s3.select(col("doc_id"), col("text")), lmModel, lmCtx, lmOov)
-                .select(col("doc_id"), col("avg_nll")), Seq("doc_id"), "left_outer")
-              .select(col("doc_id"),
-                (col("avg_nll").isNull || col("avg_nll") <= maxAvgNll).as("ok_lm"))
-          }
-          val s4 = survivors(s3, lmV, "ok_lm")
-          // 5 — fuzzy dedup against the persisted LSH index
-          val lshV = stage(s4, "ok_fuzzy") {
-            s4.select(col("doc_id"))
-              .join(Dedup.probeWithLshIndex(s4.select(col("doc_id"), col("text")),
-                  hsig, hb, lshK, lshBands, threshold)
-                .select(col("doc_id"), col("is_dup")), Seq("doc_id"), "left_outer")
-              .select(col("doc_id"),
-                (!coalesce(col("is_dup"), lit(false))).as("ok_fuzzy"))
-          }
-          // checkpointed: the sink reads it, then the accepted fold
-          // below re-reads it — without this the 6-join plan runs twice
-          val out = docs.select(col("doc_id"))
-            .join(rulesV, Seq("doc_id"), "left_outer")
-            .join(exactV, Seq("doc_id"), "left_outer")
-            .join(clsV, Seq("doc_id"), "left_outer")
-            .join(lmV, Seq("doc_id"), "left_outer")
-            .join(lshV, Seq("doc_id"), "left_outer")
-            .withColumn("keep", coalesce(col("ok_fuzzy"), lit(false)))
-            .localCheckpoint(true)
-          sink(out, batchId)
-          // accepted fold: only whole-chain admissions enter the sketch
-          val acceptedDigests = out.filter(col("keep"))
-            .join(docs.select(col("doc_id"), col("digest")), Seq("doc_id"))
-            .filter(col("digest").isNotNull)
-          if (!acceptedDigests.isEmpty)
-            accMaster.mergeInPlace(
-              acceptedDigests.stat.bloomFilter("digest", expectedItems, fpp))
-          handle.batches += 1
-        } finally {
-          bcHist.destroy(); bcAcc.destroy()
-          handle.destroyed.add(bcHist); handle.destroyed.add(bcAcc)
-        }
+    val rules = rulesGate(stopWords)
+    val bloom = new BloomGate(history, expectedItems, fpp)
+    val cls = classifierGate(spark, clsPath)
+    val lm = lmGate(spark, lmPath, maxAvgNll)
+    val fuzzy = fuzzyGate(spark, lshPath, threshold, maxBucket)
+    val writer = eachBatch(bloom.withinWatermark(stream, lateness, timeCol)) {
+      (batch, batchId) => bloom.onBatch { exact =>
+        // per-stage verdict frames are (doc_id, bit) — eagerly
+        // checkpointed so the decisions join and the next stage's
+        // semi-join don't each replay the whole upstream chain. The
+        // short-circuit is DRIVER-SIDE too: a stage whose input is
+        // empty contributes an empty verdict WITHOUT planning its
+        // kernel — the LM's vocabulary-scale model join and the LSH
+        // band join cost real per-batch work even over zero probe
+        // rows (the index side still plans/scans), which on an
+        // all-drop batch would make the "short-circuited" chain pay
+        // every gate's fixed cost anyway (measured: the round-11
+        // pricing's first cut ran 8× the LSH-alone gate on exactly
+        // that regime).
+        val docs = batch.select(col("doc_id"), col("text"), col("digest"))
+          .localCheckpoint(true)
+        // survivor sets are checkpointed too: each is read by the next
+        // kernel AND the next survivor join AND its own emptiness
+        // check — left lazy, the semi-join trees nest and the replay
+        // overhead exceeds what the short-circuit saves (measured in
+        // the round-11 pricing's second cut)
+        def survivors(prev: DataFrame, verdict: DataFrame, bit: String) =
+          prev.join(verdict.filter(col(bit)).select("doc_id"),
+            Seq("doc_id"), "left_semi").localCheckpoint(true)
+        def stage(in: DataFrame, bit: String, gate: DataFrame => DataFrame,
+            ok: Column): DataFrame =
+          if (in.isEmpty)
+            in.select(col("doc_id"), lit(true).as(bit)).limit(0)
+              .localCheckpoint(true)
+          else gate(in).select(col("doc_id"), ok.as(bit)).localCheckpoint(true)
+        val rulesV = stage(docs, "ok_rules", rules, col("keep"))
+        val s1 = survivors(docs, rulesV, "ok_rules")
+        val exactV = stage(s1, "ok_exact", exact, !col("is_dup"))
+        val s2 = survivors(s1, exactV, "ok_exact")
+        val clsV = stage(s2, "ok_cls", cls, col("keep"))
+        val s3 = survivors(s2, clsV, "ok_cls")
+        val lmV = stage(s3, "ok_lm", lm, col("keep"))
+        val s4 = survivors(s3, lmV, "ok_lm")
+        val lshV = stage(s4, "ok_fuzzy", fuzzy, col("keep"))
+        // checkpointed: the sink reads it, then the accepted fold
+        // re-reads it — without this the 6-join plan runs twice
+        val out = Seq(rulesV, exactV, clsV, lmV, lshV)
+          .foldLeft(docs.select(col("doc_id")))(_.join(_, Seq("doc_id"), "left_outer"))
+          .withColumn("keep", coalesce(col("ok_fuzzy"), lit(false)))
+          .localCheckpoint(true)
+        sink(out, batchId)
+        // accepted fold: only whole-chain admissions enter the sketch
+        out.filter(col("keep")).join(docs.select(col("doc_id"), col("digest")), Seq("doc_id"))
       }
     }
-    (writer, handle)
+    (writer, bloom.handle)
   }
 
   /** Observable state of one [[stratumBudgetGateIngest]] stream: the
@@ -862,33 +823,31 @@ object EventTimeOps {
     ) { case (acc, (s, a)) =>
       when(col("stratum") === s, lit(a.toDouble)).otherwise(acc)
     }
-    val writer = stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val inStratum = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("stratum")).orderBy(col("doc_id"))
-        val usedCase = alloc.keys.toSeq.sorted.foldLeft(lit(0L)) { (acc, s) =>
-          when(col("stratum") === s,
-            lit(Option(handle.used.get(s)).map(_.longValue).getOrElse(0L)))
-            .otherwise(acc)
-        }
-        val decided = batch
-          .select(col("doc_id"), col(strataCol).as("stratum"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens"))
-          .withColumn("cum", sum(col("n_tokens")).over(inStratum))
-          .select(col("doc_id"), col("stratum"), col("n_tokens"),
-            (usedCase + col("cum") - col("n_tokens")).as("start_tok"))
-          .withColumn("selected", col("start_tok").cast("double") < allocCase)
-          .localCheckpoint(true)
-        sink(decided, batchId)
-        decided.groupBy(col("stratum"))
-          .agg(sum(col("n_tokens")).as("t")).collect()
-          .foreach { r =>
-            val s = r.getString(0)
-            handle.used.merge(s, java.lang.Long.valueOf(r.getLong(1)),
-              (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-          }
-        handle.batches += 1
+    val writer = eachBatch(stream) { (batch, batchId) =>
+      val inStratum = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("stratum")).orderBy(col("doc_id"))
+      val usedCase = alloc.keys.toSeq.sorted.foldLeft(lit(0L)) { (acc, s) =>
+        when(col("stratum") === s,
+          lit(Option(handle.used.get(s)).map(_.longValue).getOrElse(0L)))
+          .otherwise(acc)
       }
+      val decided = batch
+        .select(col("doc_id"), col(strataCol).as("stratum"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        .withColumn("cum", sum(col("n_tokens")).over(inStratum))
+        .select(col("doc_id"), col("stratum"), col("n_tokens"),
+          (usedCase + col("cum") - col("n_tokens")).as("start_tok"))
+        .withColumn("selected", col("start_tok").cast("double") < allocCase)
+        .localCheckpoint(true)
+      sink(decided, batchId)
+      decided.groupBy(col("stratum"))
+        .agg(sum(col("n_tokens")).as("t")).collect()
+        .foreach { r =>
+          val s = r.getString(0)
+          handle.used.merge(s, java.lang.Long.valueOf(r.getLong(1)),
+            (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
+        }
+      handle.batches += 1
     }
     (writer, handle)
   }
@@ -932,37 +891,35 @@ object EventTimeOps {
       sink: (DataFrame, Long) => Unit): (DataStreamWriter[Row], BucketBatchHandle) = {
     require(batchSize > 0 && bucketWidth > 0)
     val handle = new BucketBatchHandle
-    val writer = stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val inBkt = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("bkt")).orderBy(col("doc_id"))
-        // cursors fold in as a literal CASE over the handle's buckets
-        // (the budget-gate device) — a per-batch broadcast JOIN here
-        // measured ×4.3 vs the pass-through twin; the CASE prices ×2ish
-        val usedCase = handle.used.asScala.toSeq
-          .sortBy(_._1.longValue)
-          .foldLeft(lit(0L)) { case (acc, (b, u)) =>
-            when(col("bkt") === b.longValue, lit(u.longValue)).otherwise(acc)
-          }
-        val decided = batch
-          .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens"))
-          .withColumn("bkt", expr(s"CAST(n_tokens DIV $bucketWidth AS BIGINT)"))
-          .withColumn("rn", row_number().over(inBkt).cast("long"))
-          .withColumn("pos", usedCase + col("rn") - 1L)
-          .select(col("doc_id"), col("n_tokens"), col("bkt"),
-            expr(s"CAST(pos DIV $batchSize AS BIGINT)").as("batch_id"),
-            expr(s"CAST(pos % $batchSize AS BIGINT)").as("slot"))
-          .localCheckpoint(true)
-        sink(decided, batchId)
-        decided.groupBy(col("bkt")).agg(count(lit(1)).as("c")).collect()
-          .foreach { r =>
-            handle.used.merge(java.lang.Long.valueOf(r.getLong(0)),
-              java.lang.Long.valueOf(r.getLong(1)),
-              (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-          }
-        handle.batches += 1
-      }
+    val writer = eachBatch(stream) { (batch, batchId) =>
+      val inBkt = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("bkt")).orderBy(col("doc_id"))
+      // cursors fold in as a literal CASE over the handle's buckets
+      // (the budget-gate device) — a per-batch broadcast JOIN here
+      // measured ×4.3 vs the pass-through twin; the CASE prices ×2ish
+      val usedCase = handle.used.asScala.toSeq
+        .sortBy(_._1.longValue)
+        .foldLeft(lit(0L)) { case (acc, (b, u)) =>
+          when(col("bkt") === b.longValue, lit(u.longValue)).otherwise(acc)
+        }
+      val decided = batch
+        .select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        .withColumn("bkt", expr(s"CAST(n_tokens DIV $bucketWidth AS BIGINT)"))
+        .withColumn("rn", row_number().over(inBkt).cast("long"))
+        .withColumn("pos", usedCase + col("rn") - 1L)
+        .select(col("doc_id"), col("n_tokens"), col("bkt"),
+          expr(s"CAST(pos DIV $batchSize AS BIGINT)").as("batch_id"),
+          expr(s"CAST(pos % $batchSize AS BIGINT)").as("slot"))
+        .localCheckpoint(true)
+      sink(decided, batchId)
+      decided.groupBy(col("bkt")).agg(count(lit(1)).as("c")).collect()
+        .foreach { r =>
+          handle.used.merge(java.lang.Long.valueOf(r.getLong(0)),
+            java.lang.Long.valueOf(r.getLong(1)),
+            (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
+        }
+      handle.batches += 1
     }
     (writer, handle)
   }
@@ -1014,17 +971,15 @@ object EventTimeOps {
     */
   def cardIngest(stream: DataFrame, p: Int = 8): (DataStreamWriter[Row], CardIngestHandle) = {
     val handle = new CardIngestHandle(p)
-    val writer = stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val (incRegs, incState) =
-          graft.operators.TextAnalysis.cardIncrement(batch.toDF(), p)
-        val r = incRegs.collect()
-          .map(x => (x.getString(0), x.getLong(1)) -> x.getInt(2)).toSeq
-        val s = incState.collect()
-          .map(x => x.getString(0) -> x.getDecimal(1)).toSeq
-        handle.merge(r, s)
-        handle.batches += 1
-      }
+    val writer = eachBatch(stream) { (batch, _) =>
+      val (incRegs, incState) =
+        graft.operators.TextAnalysis.cardIncrement(batch, p)
+      val r = incRegs.collect()
+        .map(x => (x.getString(0), x.getLong(1)) -> x.getInt(2)).toSeq
+      val s = incState.collect()
+        .map(x => x.getString(0) -> x.getDecimal(1)).toSeq
+      handle.merge(r, s)
+      handle.batches += 1
     }
     (writer, handle)
   }
@@ -1073,15 +1028,12 @@ object EventTimeOps {
       k: Int): (DataStreamWriter[Row], WeightedReservoirHandle) = {
     require(k >= 1, s"weightedReservoirIngest: k=$k")
     val handle = new WeightedReservoirHandle(k)
-    val writer = stream.writeStream.foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val top = graft.operators.Sampling.weightedSample(batch, weight, k)
-            .collect()
-            .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-          handle.merge(top.toSeq)
-          handle.batches += 1
-        }
+    val writer = eachBatch(stream) { (batch, _) =>
+      val top = graft.operators.Sampling.weightedSample(batch, weight, k)
+        .collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+      handle.merge(top.toSeq)
+      handle.batches += 1
     }
     (writer, handle)
   }
@@ -1127,27 +1079,24 @@ object EventTimeOps {
       weight: Column, k: Int): (DataStreamWriter[Row], StratifiedReservoirHandle) = {
     require(k >= 1, s"stratifiedReservoirIngest: k=$k")
     val handle = new StratifiedReservoirHandle(k)
-    val writer = stream.writeStream.foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("stratum"))
-            .orderBy(col("priority").desc, col("doc_id"))
-          val top = batch
-            .select(col(strataCol).as("stratum"), col("doc_id"),
-              weight.cast("double").as("w"))
-            .filter(col("w") > 0)
-            .select(col("stratum"), col("doc_id"), col("w"),
-              graft.operators.Sampling.esPriority(col("doc_id"), col("w"))
-                .as("priority"))
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= k)
-            .collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-              r.getDouble(3)))
-          handle.merge(top.toSeq)
-          handle.batches += 1
-        }
+    val writer = eachBatch(stream) { (batch, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("stratum"))
+        .orderBy(col("priority").desc, col("doc_id"))
+      val top = batch
+        .select(col(strataCol).as("stratum"), col("doc_id"),
+          weight.cast("double").as("w"))
+        .filter(col("w") > 0)
+        .select(col("stratum"), col("doc_id"), col("w"),
+          graft.operators.Sampling.esPriority(col("doc_id"), col("w"))
+            .as("priority"))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+          r.getDouble(3)))
+      handle.merge(top.toSeq)
+      handle.batches += 1
     }
     (writer, handle)
   }
@@ -1290,7 +1239,6 @@ object EventTimeOps {
       windowSeconds: Long = 60L, lateness: String = "2 minutes",
       p: Int = 8): Dataset[WindowCardinality] = {
     import spark.implicits._
-    import graft.operators.Dedup
     require(p >= 4 && p <= 16, s"p=$p out of range")
     val m = 1 << p
     val L1 = 60 - p + 1
@@ -1358,7 +1306,6 @@ object EventTimeOps {
       windowSeconds: Long = 60L, lateness: String = "2 minutes")
       : Dataset[WindowTermEstimate] = {
     import spark.implicits._
-    import graft.operators.Dedup
     require(depth >= 1 && width >= 1, s"depth=$depth width=$width")
     require(queryKeys.nonEmpty, "need query keys")
     envelope

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.{RedditLog, Tables}
+import graft.sources.RedditLog
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -62,16 +62,15 @@ object RedditLogSink {
 
   /** Quality-GATED ingest (round 10): the CCNet perplexity gate
     * composed INTO the log's writer path — each micro-batch's `json`
-    * body text is scored against a persisted
-    * [[graft.operators.TextAnalysis.saveBigramLm]] store with the
-    * batch kernel verbatim (the same
-    * [[graft.operators.TextAnalysis.scoreWithBigramModel]] the d49
-    * oracle verifies and [[EventTimeOps.lmQualityGateIngest]] uses, so
-    * the three surfaces cannot diverge), and only kept rows reach
-    * [[RedditLog.append]]. Keep semantics are the gate's: dropped iff
-    * `avg_nll > maxAvgNll`; bodies too short to have bigrams (or
-    * absent) score null and are KEPT — length/shape gates are the
-    * d07/d14 operators' job, not the LM's.
+    * body text is judged by the LM gate definition
+    * ([[EventTimeOps.lmGate]], the same one
+    * [[EventTimeOps.lmQualityGateIngest]] and the chained gate call, over
+    * the [[graft.operators.TextAnalysis.scoreWithBigramModel]] kernel the
+    * d49 oracle verifies, so the three surfaces cannot diverge), and
+    * only kept rows reach [[RedditLog.append]]. Keep semantics are the
+    * gate's: dropped iff `avg_nll > maxAvgNll`; bodies too short to have
+    * bigrams (or absent) score null and are KEPT — length/shape gates
+    * are the d07/d14 operators' job, not the LM's.
     *
     * Dropping rows leaves id GAPS in the log, which the read side
     * already defines semantics for (SURVEY.md §2 S3 gap-skip): gaps
@@ -90,30 +89,17 @@ object RedditLogSink {
       checkpointDir: String, lmPath: String, maxAvgNll: Double,
       triggerMillis: Long = 1000L, targetRows: Long = 100000L,
       maxSmall: Int = 16, graceMillis: Long = 60000L): StreamingQuery = {
-    import graft.operators.TextAnalysis
-    import graft.sources.IndexManifest
     val spark = events.sparkSession
-    IndexManifest.require(lmPath, "bigram-lm")
-    val model = Tables.readParquet(spark, s"$lmPath/model").persist()
-    val ctx = Tables.readParquet(spark, s"$lmPath/ctx").persist()
-    val oov = Tables.readParquet(spark, s"$lmPath/consts").head().getDecimal(1)
+    val lm = EventTimeOps.lmGate(spark, lmPath, maxAvgNll)
     NioCheckpointFileManager.install(spark)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
+    EventTimeOps.eachBatch(events) { (batch, _) =>
+      val dropped = lm(batch.select(col("id").as("doc_id"),
+          coalesce(get_json_object(col("json"), "$.body"), lit("")).as("text")))
+        .filter(!col("keep")).select(col("doc_id").as("id"))
+      appendBatch(batch.join(dropped, Seq("id"), "left_anti"),
+        dir, targetRows, maxSmall, graceMillis)
+    }.option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMillis))
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val scored = TextAnalysis.scoreWithBigramModel(
-            batch.select(col("id").as("doc_id"),
-              coalesce(get_json_object(col("json"), "$.body"), lit("")).as("text")),
-            model, ctx, oov)
-          val dropped = scored.filter(col("avg_nll") > maxAvgNll)
-            .select(col("doc_id").as("id"))
-          val kept = batch.join(dropped, Seq("id"), "left_anti")
-          appendBatch(kept, dir, targetRows, maxSmall, graceMillis)
-        }
-        ()
-      }
       .start()
   }
 
