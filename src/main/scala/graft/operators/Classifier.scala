@@ -91,13 +91,10 @@ object Classifier {
     */
   def saveClassifier(docs: DataFrame, labelPred: Column, path: String,
       nBuckets: Int = 64, passes: Int = 3): Unit = {
-    import graft.sources.IndexManifest
-    trainPerceptron(docs, labelPred, nBuckets, passes)
-      .write.mode("overwrite").parquet(s"$path/weights")
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("perceptron",
-      Map("n_buckets" -> nBuckets.toLong, "passes" -> passes.toLong),
-      rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "perceptron", false, docs, "doc_id",
+      _ => Map("n_buckets" -> nBuckets.toLong, "passes" -> passes.toLong))(
+      () => trainPerceptron(docs, labelPred, nBuckets, passes)
+        .write.mode("overwrite").parquet(s"$path/weights"))
   }
 
   /** Score any corpus against a persisted [[saveClassifier]] artifact:

@@ -187,14 +187,12 @@ object Curation {
       maxBucket: Long, maxDf: Long, path: String,
       minTokens: Int = 20, maxTopNgram: Double = 0.2,
       maxDupToken: Double = 0.8, maxCopyFrac: Double = 0.5): Unit = {
-    keepList(docs, evalPred, rates, defaultRate, k, bands, threshold,
-      maxBucket, maxDf, minTokens, maxTopNgram, maxDupToken, maxCopyFrac)
-      .write.mode("overwrite").parquet(s"$path/verdict")
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("keep-list",
-      keepParams(rates, defaultRate, k, bands, threshold, maxBucket,
-        maxDf, minTokens, maxTopNgram, maxDupToken, maxCopyFrac),
-      rows, maxId))
+    IndexManifest.rebuild(path, "keep-list", false, docs, "doc_id",
+      _ => keepParams(rates, defaultRate, k, bands, threshold, maxBucket,
+        maxDf, minTokens, maxTopNgram, maxDupToken, maxCopyFrac))(
+      () => keepList(docs, evalPred, rates, defaultRate, k, bands, threshold,
+          maxBucket, maxDf, minTokens, maxTopNgram, maxDupToken, maxCopyFrac)
+        .write.mode("overwrite").parquet(s"$path/verdict"))
   }
 
   /** Read a persisted verdict — manifest-gated (kind check; a missing
@@ -292,11 +290,9 @@ object Curation {
       val keep = keepListCached(docs, evalPred, rates, defaultRate, k, bands,
         threshold, maxBucket, maxDf, keepPath, minTokens, maxTopNgram,
         maxDupToken, maxCopyFrac)
-      fullVerdict(docs, keep, lmScale, clsLabel, clsBuckets, clsPasses)
-        .write.mode("overwrite").parquet(s"$path/verdict")
-      val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-      IndexManifest.write(path,
-        IndexManifest.Manifest("curation", params, rows, maxId))
+      IndexManifest.rebuild(path, "curation", false, docs, "doc_id", _ => params)(
+        () => fullVerdict(docs, keep, lmScale, clsLabel, clsBuckets, clsPasses)
+          .write.mode("overwrite").parquet(s"$path/verdict"))
     }
     IndexManifest.require(path, "curation")
     Tables.readParquet(spark, s"$path/verdict")

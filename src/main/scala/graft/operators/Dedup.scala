@@ -1364,25 +1364,21 @@ object Dedup {
     * distinct gram; at 100 TB you'd bucket it BY hs so each increment's
     * probe join co-locates without shuffling the index.
     */
-  def saveGramIndex(history: DataFrame, path: String, minLen: Int = 8): Unit = {
-    import graft.sources.IndexManifest
-    val (rows, maxId) = IndexManifest.watermark(history, "doc_id")
+  def saveGramIndex(history: DataFrame, path: String, minLen: Int = 8): Unit =
     // wm = the watermark of the write that added the row — grams carry
-    // no doc ids, so this column is what makes the d153 snapshot
-    // device applicable: as-of version N keeps rows with wm ≤ N's
-    // watermark, which is EXACTLY the gram set of docs ≤ that
-    // watermark (a gram present in both history and an increment keeps
-    // its history-wm row; an increment-only gram is filtered out)
-    // clear the old lineage BEFORE the data overwrite: a crash in the
-    // window would otherwise leave version files claiming watermarks
-    // the rewritten data no longer has (ADVICE r12)
-    IndexManifest.clearVersions(path)
-    positionalGrams(history, minLen).select(col("hs")).distinct()
-      .withColumn("wm", lit(maxId))
-      .write.mode("overwrite").parquet(s"$path/grams")
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest(
-      "gram", Map("min_len" -> minLen.toLong), rows, maxId))
-  }
+    // no doc ids, so this column is what makes the d153 snapshot device
+    // applicable: as-of version N keeps rows with wm ≤ N's watermark,
+    // which is EXACTLY the gram set of docs ≤ that watermark (a gram
+    // present in both history and an increment keeps its history-wm row;
+    // an increment-only gram is filtered out). The rows carry the
+    // rebuild's watermark, so the table is written after its agg.
+    graft.sources.IndexManifest.rebuild(path, "gram", true, history, "doc_id",
+      r => {
+        positionalGrams(history, minLen).select(col("hs")).distinct()
+          .withColumn("wm", lit(if (r.isNullAt(1)) -1L else r.getLong(1)))
+          .write.mode("overwrite").parquet(s"$path/grams")
+        Map("min_len" -> minLen.toLong)
+      })()
 
   /** APPEND to a persisted gram index — the increment's distinct gram
     * hashes land as new rows (mode append, wm = the new watermark);
@@ -1396,15 +1392,13 @@ object Dedup {
   def appendGramIndex(increment: DataFrame, path: String,
       minLen: Int = 8): Unit = {
     import graft.sources.IndexManifest
-    val inc = IndexManifest.beginAppend(increment, "doc_id",
-      IndexManifest.require(path, "gram", Map("min_len" -> minLen.toLong)), path)
-    if (inc.isEmpty) return
-    IndexManifest.requireNoOrphans(
-      Tables.readParquet(increment.sparkSession, s"$path/grams"), "wm", inc.man, path)
-    positionalGrams(increment, minLen).select(col("hs")).distinct()
-      .withColumn("wm", lit(inc.maxId))
-      .write.mode("append").parquet(s"$path/grams")
-    IndexManifest.writeVersioned(path, inc.advanced)
+    IndexManifest.append(path,
+        IndexManifest.require(path, "gram", Map("min_len" -> minLen.toLong)),
+        true, increment, "doc_id", Seq("grams" -> "wm"), _.man.params) { inc =>
+      Seq(() => positionalGrams(increment, minLen).select(col("hs")).distinct()
+        .withColumn("wm", lit(inc.maxId))
+        .write.mode("append").parquet(s"$path/grams"))
+    }
   }
 
   /** Incremental ExactSubstr against a PERSISTED gram index (d44) —
@@ -1974,30 +1968,18 @@ object Dedup {
   def saveLshIndex(history: DataFrame, path: String, k: Int = 64,
       bands: Int = 16): Unit = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    // rebuild = new lineage; versions cleared BEFORE the data overwrite
-    // (crash-window ordering, ADVICE r12)
-    graft.sources.IndexManifest.clearVersions(path)
     // checkpointed: sig feeds BOTH table writes — uncheckpointed, the
     // bands write re-ran the whole shingle+md5+minhash chain
     val sig = minhash(hashedShingles(history), k).localCheckpoint(true)
-    // the two table writes and the watermark agg are order-independent
-    // (every crash state before the manifest flip below is an unmani-
-    // fested/overwritten store) — run them concurrently instead of as
-    // three sequential sub-second jobs (IndexManifest.awaitAll doc)
-    var wm: (Long, Long) = (0L, -1L)
-    graft.sources.IndexManifest.awaitAll(Seq(
-      () => sig.write.mode("overwrite").parquet(s"$path/sig"),
-      () => bandRows(sig, k, bands).write.mode("overwrite")
-        .parquet(s"$path/bands"),
-      () => wm = graft.sources.IndexManifest.watermark(history, "doc_id")))
-    val (rows, maxId) = wm
     // VERSIONED (the d153 device): sig and band rows both carry doc_id
     // and appends are id-monotone with frozen history files, so a
     // snapshot version IS its watermark — an as-of probe is the same
     // candidate join over one pushed doc_id cut ([[lshDedupIndexed]]).
-    graft.sources.IndexManifest.writeVersioned(path,
-      graft.sources.IndexManifest.Manifest(
-        "lsh", Map("k" -> k.toLong, "bands" -> bands.toLong), rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "lsh", true, history, "doc_id",
+      _ => Map("k" -> k.toLong, "bands" -> bands.toLong))(
+      () => sig.write.mode("overwrite").parquet(s"$path/sig"),
+      () => bandRows(sig, k, bands).write.mode("overwrite")
+        .parquet(s"$path/bands"))
   }
 
   /** APPEND new documents to a persisted LSH index (d78) — signatures
@@ -2010,38 +1992,22 @@ object Dedup {
     */
   def appendLshIndex(newDocs: DataFrame, path: String): Unit = {
     import graft.sources.IndexManifest
-    val inc = IndexManifest.beginAppend(newDocs, "doc_id",
-      IndexManifest.require(path, "lsh"), path)
-    if (inc.isEmpty) return
-    val man = inc.man
-    val k = man.params("k").toInt
-    val bands = man.params("bands").toInt
-    // orphan guard: a prior append that crashed before its manifest flip
-    // left sig rows above the watermark; appending again would duplicate.
-    // Overlapped with the increment's signature materialization — the
-    // guard is a pure read, and on failure nothing has been written
-    // (the checkpoint blocks die with the JVM's hygiene pass); both
-    // complete before either outcome propagates (awaitAll doc).
-    // BOTH tables are guarded: with the writes below concurrent, a crash
-    // can commit either table first, so the bands table needs its own
-    // orphan witness (the old sequential order guaranteed bands ⇒ sig)
-    var sig: DataFrame = null
-    IndexManifest.awaitAll(Seq(
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(newDocs.sparkSession, s"$path/sig"), "doc_id", man, path),
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(newDocs.sparkSession, s"$path/bands"), "doc_id", man, path),
+    // BOTH tables guarded: the two appends run concurrently, so a crash
+    // can commit either table first, and each needs its own orphan
+    // witness. The increment's signature materialization overlaps the
+    // guards (a pure read: on failure nothing has been written, and the
+    // checkpoint blocks die with the JVM's hygiene pass).
+    IndexManifest.append(path, IndexManifest.require(path, "lsh"), true,
+        newDocs, "doc_id", Seq("sig" -> "doc_id", "bands" -> "doc_id"),
+        _.man.params) { inc =>
+      val (k, bands) = (inc.man.params("k").toInt, inc.man.params("bands").toInt)
       // checkpointed: both table writes read sig (saveLshIndex doc)
-      () => sig = minhash(hashedShingles(newDocs), k).localCheckpoint(true)))
-    // the two appends are order-independent (a crash between them is
-    // caught by the per-table orphan guards above — the manifest flip
-    // is the commit point); run them concurrently
-    IndexManifest.awaitAll(Seq(
-      () => sig.write.mode("append").parquet(s"$path/sig"),
-      () => bandRows(sig, k, bands).write.mode("append")
-        .parquet(s"$path/bands")))
-    // every append is a new snapshot version (the d153 device)
-    IndexManifest.writeVersioned(path, inc.advanced)
+      val sig = minhash(hashedShingles(newDocs), k).localCheckpoint(true)
+      Seq(
+        () => sig.write.mode("append").parquet(s"$path/sig"),
+        () => bandRows(sig, k, bands).write.mode("append")
+          .parquet(s"$path/bands"))
+    }
   }
 
   /** Fuzzy-dedup an increment against a persisted LSH index (d77) —
@@ -2091,12 +2057,20 @@ object Dedup {
           Tables.readParquet(spark, s"$path/bands").filter(col("doc_id") <= wm))
     }
     // probe-time bucket cap over the (possibly snapshot-cut) counts
-    val ok = hbands.groupBy(col("bno"), col("bkey"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
-      .select(col("bno"), col("bkey"))
-    val hb = hbands.join(ok, Seq("bno", "bkey"))
-    probeWithLshIndex(increment, hsig, hb, k, bands, threshold)
+    probeWithLshIndex(increment, hsig, cappedBands(hbands, maxBucket), k,
+      bands, threshold)
   }
+
+  /** The probe-time bucket cap: the band rows of buckets holding at most
+    * `maxBucket` docs, counted over `hbands` as loaded (the live table or
+    * a snapshot cut), so the cap follows appends. Shared by
+    * [[lshDedupIndexed]] and the streaming fuzzy-dedup gate.
+    */
+  private[graft] def cappedBands(hbands: DataFrame, maxBucket: Long): DataFrame =
+    hbands.join(hbands.groupBy(col("bno"), col("bkey"))
+        .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
+        .select(col("bno"), col("bkey")),
+      Seq("bno", "bkey"))
 
   /** The probe kernel behind [[lshDedupIndexed]], over already-loaded
     * (and bucket-capped) index frames — callers that probe MANY

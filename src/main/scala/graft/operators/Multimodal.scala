@@ -224,35 +224,26 @@ object Multimodal {
     * are exact — appended index ≡ fresh rebuild row-for-row
     * ([[appendPhashIndex]], the d78/e42-strength claim).
     */
-  def savePhashIndex(history: DataFrame, path: String, radius: Int = 3): Unit = {
-    // rebuild = new lineage; versions die BEFORE the data overwrite
-    // (the shared crash-window ordering)
-    graft.sources.IndexManifest.clearVersions(path)
-    phashBlocks(history, radius).write.mode("overwrite")
-      .parquet(s"$path/blocks")
-    val (rows, maxId) = graft.sources.IndexManifest.watermark(history, "doc_id")
+  def savePhashIndex(history: DataFrame, path: String, radius: Int = 3): Unit =
     // VERSIONED (the d153 device, media edition): block rows carry
     // doc_id and appends are id-monotone with frozen history files, so
     // an as-of probe is the same pigeonhole join over one pushed cut
-    graft.sources.IndexManifest.writeVersioned(path,
-      graft.sources.IndexManifest.Manifest(
-        "phash", Map("radius" -> radius.toLong), rows, maxId))
-  }
+    graft.sources.IndexManifest.rebuild(path, "phash", true, history, "doc_id",
+      _ => Map("radius" -> radius.toLong))(
+      () => phashBlocks(history, radius).write.mode("overwrite")
+        .parquet(s"$path/blocks"))
 
   /** Id-monotone append to a persisted phash index (m08) — history
     * block files stay byte-frozen; append ≡ rebuild exactly.
     */
   def appendPhashIndex(newMedia: DataFrame, path: String): Unit = {
     import graft.sources.IndexManifest
-    val inc = IndexManifest.beginAppend(newMedia, "doc_id",
-      IndexManifest.require(path, "phash"), path)
-    if (inc.isEmpty) return
-    IndexManifest.requireNoOrphans(
-      Tables.readParquet(newMedia.sparkSession, s"$path/blocks"), "doc_id", inc.man, path)
-    phashBlocks(newMedia, inc.man.params("radius").toInt).write.mode("append")
-      .parquet(s"$path/blocks")
     // every append is a new snapshot version (the d153 device)
-    IndexManifest.writeVersioned(path, inc.advanced)
+    IndexManifest.append(path, IndexManifest.require(path, "phash"), true,
+        newMedia, "doc_id", Seq("blocks" -> "doc_id"), _.man.params) { inc =>
+      Seq(() => phashBlocks(newMedia, inc.man.params("radius").toInt)
+        .write.mode("append").parquet(s"$path/blocks"))
+    }
   }
 
   /** Probe a persisted phash index with an increment (m08) — per

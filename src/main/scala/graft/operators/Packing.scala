@@ -310,43 +310,31 @@ object Packing {
     */
   def saveTokenShards(docs: DataFrame, path: String, budget: Long,
       bucketBits: Int = 8): Unit = {
-    import graft.sources.IndexManifest
     val asg = tokenShards(docs, budget, bucketBits)
       .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-    // a rebuild starts a new store lineage — old snapshot versions die
-    // BEFORE the data overwrite (crash-window ordering, ADVICE r12)
-    IndexManifest.clearVersions(path)
-    // an EMPTY corpus is a legitimate input (a curated selection can
-    // come up empty — measured: the decontamination gate admits zero
-    // sf0.1 docs), but dynamic partitionBy writes NO files for zero
-    // rows and the store becomes unreadable (schema inference fails);
-    // write the schema-only empty frame unpartitioned instead
-    if (docs.isEmpty)
-      asg.write.mode("overwrite").parquet(s"$path/shards")
-    else shardWriteLayout(asg, docs)
-      .write.mode("overwrite").partitionBy("shard_id")
-      .parquet(s"$path/shards")
-    // the watermark agg and the just-written store's token total are
-    // independent reads (manifest flip below is the commit point) —
-    // overlapped (IndexManifest.awaitAll doc). The total reads the
-    // store (a column-pruned two-long scan), never re-tokenizes.
-    var wm: (Long, Long) = (0L, -1L)
-    var total = 0L
-    IndexManifest.awaitAll(Seq(
-      () => wm = IndexManifest.watermark(docs, "doc_id"),
-      () => total = Tables.readParquet(docs.sparkSession, s"$path/shards")
-        .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)))
-    val (rows, maxId) = wm
     // VERSIONED (the d153 device): the store is doc_id-monotone
     // append-only with history shard files byte-frozen and start_tokens
     // recorded verbatim, so a snapshot version IS its watermark — and
     // each version's n_tokens_total param pins where ITS frozen token
     // stream ends. This is the flagship time-travel application:
     // "reproduce the exact shard set training run X consumed" is one
-    // id cut ([[readShardStoreAt]]).
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest("shards",
-      Map("budget" -> budget, "bucket_bits" -> bucketBits.toLong,
-        "n_tokens_total" -> total), rows, maxId))
+    // id cut ([[readShardStoreAt]]). The total reads the just-written
+    // store (a column-pruned two-long scan), never re-tokenizes.
+    graft.sources.IndexManifest.rebuild(path, "shards", true, docs, "doc_id",
+      _ => Map("budget" -> budget, "bucket_bits" -> bucketBits.toLong,
+        "n_tokens_total" -> Tables.readParquet(docs.sparkSession, s"$path/shards")
+          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)))(
+      // an EMPTY corpus is a legitimate input (a curated selection can
+      // come up empty — measured: the decontamination gate admits zero
+      // sf0.1 docs), but dynamic partitionBy writes NO files for zero
+      // rows and the store becomes unreadable (schema inference fails);
+      // write the schema-only empty frame unpartitioned instead
+      () =>
+        if (docs.isEmpty)
+          asg.write.mode("overwrite").parquet(s"$path/shards")
+        else shardWriteLayout(asg, docs)
+          .write.mode("overwrite").partitionBy("shard_id")
+          .parquet(s"$path/shards"))
   }
 
   /** Shard-store integrity audit (d131) — the bit-rot / partial-write
@@ -466,14 +454,11 @@ object Packing {
         val selPrefix = selected.filter(col("doc_id") <= m.corpusMaxId)
           .select(col("doc_id"))
         // the two membership anti-join counts are independent reads —
-        // overlapped (IndexManifest.awaitAll doc)
-        var dA = 0L
-        var dB = 0L
-        IndexManifest.awaitAll(Seq(
-          () => dA = selPrefix.join(storeIds, Seq("doc_id"), "left_anti").count(),
-          () => dB = storeIds.join(selPrefix, Seq("doc_id"), "left_anti").count()))
-        val drift = dA + dB
-        if (drift > 0) rebuild()
+        // overlapped
+        val (dA, dB) = graft.Overlap(
+          selPrefix.join(storeIds, Seq("doc_id"), "left_anti").count(),
+          storeIds.join(selPrefix, Seq("doc_id"), "left_anti").count())
+        if (dA + dB > 0) rebuild()
         else if (selected.filter(col("doc_id") > m.corpusMaxId).isEmpty) "fresh"
         else {
           try {
@@ -524,13 +509,12 @@ object Packing {
     val base = m.params.getOrElse("n_tokens_total",
       throw new IndexManifestException(
         s"shards index at $path predates incremental append (no 'n_tokens_total') — rebuild once"))
-    val inc = IndexManifest.beginAppend(newDocs, "doc_id", m, path)
-    if (inc.isEmpty) return
     // appending to an EMPTY store ≡ a fresh build (the frozen stream has
     // zero length), and must BE one: the empty store's schema-only file
     // sits unpartitioned, so a partitioned append would leave a mixed
     // layout partition discovery rejects
     if (m.corpusRows == 0L) {
+      if (IndexManifest.beginAppend(newDocs, "doc_id", m, path).isEmpty) return
       saveTokenShards(newDocs, path, budget, bucketBits)
       if (extraParams.nonEmpty) {
         val m2 = IndexManifest.read(path)
@@ -538,8 +522,6 @@ object Packing {
       }
       return
     }
-    IndexManifest.requireNoOrphans(
-      Tables.readParquet(newDocs.sparkSession, s"$path/shards"), "doc_id", m, path)
     // increment-local prefix sum in the same deterministic order, then
     // offset by the frozen stream's length (both references to the input
     // start_token column — the local offset)
@@ -547,20 +529,22 @@ object Packing {
       .select(col("doc_id"), col("n_tokens"),
         (col("start_token") + base).as("start_token"),
         expr(s"CAST((start_token + $base) DIV $budget AS BIGINT)").as("shard_id"))
-    shardWriteLayout(
-        asg.join(newDocs.select(col("doc_id"), col("text")), Seq("doc_id")),
-        newDocs)
-      .write.mode("append").partitionBy("shard_id")
-      .parquet(s"$path/shards")
-    val incr = asg.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
     // every append is a new snapshot version (the d153 device): history
     // shard files are byte-frozen and the increment lands strictly after
     // the frozen token stream, so version N is exactly the rows at or
     // below N's watermark. extraParams ride the SAME manifest flip
     // (e.g. the streaming gate's last_batch_id — the atomicity is what
     // makes its replay-skip check trustworthy).
-    IndexManifest.writeVersioned(path, inc.advanced.copy(
-      params = m.params ++ extraParams + ("n_tokens_total" -> (base + incr))))
+    IndexManifest.append(path, m, true, newDocs, "doc_id",
+      Seq("shards" -> "doc_id"),
+      _ => m.params ++ extraParams + ("n_tokens_total" ->
+        (base + asg.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)))) { _ =>
+      Seq(() => shardWriteLayout(
+          asg.join(newDocs.select(col("doc_id"), col("text")), Seq("doc_id")),
+          newDocs)
+        .write.mode("append").partitionBy("shard_id")
+        .parquet(s"$path/shards"))
+    }
   }
 
   /** Read ONE shard from a [[saveTokenShards]] store — manifest-gated,

@@ -1005,25 +1005,23 @@ object Similarity {
     val n = normalized(emb)
     val cents = seedCentroids(n, nCells)
     val (subDim, books) = trainedBooks(emb, m, ks, passes)
-    n.withColumn("cell",
-        (-array_max(scoresFor(cents)).getField("nid")).cast("long"))
-      .withColumn("codes",
-        graft.functions.PqCodebook.assign(col("e"), books, m, subDim))
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    cents.toDF("cid", "ce").write.mode("overwrite").parquet(s"$path/cents")
-    // the trained book nests (code)(sub)(dim) — the kernel's flat
-    // layout is [(c·m + s)·subDim + j], so CODE is the outer axis
-    books.zipWithIndex.flatMap { case (cw, c) =>
-      cw.zipWithIndex.flatMap { case (slice, s) =>
-        slice.zipWithIndex.map { case (v, d) => (c.toLong, s.toLong, d.toLong, v) } } }
-      .toDF("code", "sub", "dim", "v")
-      .write.mode("overwrite").parquet(s"$path/books")
-    val (rows, maxId) = IndexManifest.watermark(emb, "vec_id")
-    IndexManifest.write(path, IndexManifest.Manifest("ivf-pq",
-      Map("cells" -> nCells.toLong, "m" -> m.toLong, "ks" -> ks.toLong,
-        "passes" -> passes.toLong, "dims" -> (m.toLong * subDim)),
-      rows, maxId))
+    IndexManifest.rebuild(path, "ivf-pq", false, emb, "vec_id",
+      _ => Map("cells" -> nCells.toLong, "m" -> m.toLong, "ks" -> ks.toLong,
+        "passes" -> passes.toLong, "dims" -> (m.toLong * subDim)))(
+      () => n.withColumn("cell",
+          (-array_max(scoresFor(cents)).getField("nid")).cast("long"))
+        .withColumn("codes",
+          graft.functions.PqCodebook.assign(col("e"), books, m, subDim))
+        .select(col("vec_id"), col("cell"), col("codes"))
+        .write.mode("overwrite").parquet(s"$path/codes"),
+      () => cents.toDF("cid", "ce").write.mode("overwrite").parquet(s"$path/cents"),
+      // the trained book nests (code)(sub)(dim) — the kernel's flat
+      // layout is [(c·m + s)·subDim + j], so CODE is the outer axis
+      () => books.zipWithIndex.flatMap { case (cw, c) =>
+          cw.zipWithIndex.flatMap { case (slice, s) =>
+            slice.zipWithIndex.map { case (v, d) => (c.toLong, s.toLong, d.toLong, v) } } }
+        .toDF("code", "sub", "dim", "v")
+        .write.mode("overwrite").parquet(s"$path/books"))
   }
 
   /** QUERY a persisted IVF-PQ index (e32) — the query-many half:
@@ -1547,25 +1545,17 @@ object Similarity {
     // empties during training drops out (the standard dead-centroid
     // policy); the manifest records the SURVIVING cell count.
     // centroid selection and the SQ8 min/max training pass are
-    // independent driver collects — overlapped (awaitAll doc)
-    var cents: Seq[(Long, Seq[Double])] = null
-    var mm: (Seq[Double], Seq[Double]) = null
-    IndexManifest.awaitAll(Seq(
-      () => cents =
-        (if (trainIters == 0) seedCentroids(n, nCells)
-         else collectCentroids(kmeansKcenterSeeded(emb, nCells, trainIters))),
-      () => mm = sqStats(n)))
-    val (mins, maxs) = mm
+    // independent driver collects — overlapped
+    val (cents, (mins, maxs)) = graft.Overlap(
+      if (trainIters == 0) seedCentroids(n, nCells)
+      else collectCentroids(kmeansKcenterSeeded(emb, nCells, trainIters)),
+      sqStats(n))
     val scales = maxs.zip(mins).map { case (mx, mn) =>
       if (mx > mn) (mx - mn) / 255.0 else 1.0 }
     val codes = n.withColumn("cell",
         (-array_max(scoresFor(cents)).getField("nid")).cast("long"))
       .withColumn("codes", sqEncode(typedLit(mins), typedLit(scales)))
       .select(col("vec_id"), col("cell"), col("codes"))
-    // a rebuild starts a new lineage — versions cleared BEFORE the data
-    // overwrite so a crash in the window can't leave snapshots claiming
-    // watermarks the rewritten data no longer has (ADVICE r12)
-    IndexManifest.clearVersions(path)
     // partitionByCell = the 100 TB layout: one directory per cell, so a
     // probe-bounded reader prunes unprobed cells at the FILE-INDEX
     // layer (PartitionFilters), never opening their footers. Laid out
@@ -1576,10 +1566,13 @@ object Similarity {
         graft.sources.ScanParallelism.layoutForWrite(
           codes, cents.size, Seq(col("cell")))
       else codes
-    // the three table writes and the watermark agg are order-independent
-    // (manifest flip below is the commit point) — overlapped
-    var wm: (Long, Long) = (0L, -1L)
-    IndexManifest.awaitAll(Seq(
+    // versioned (the d153 device; rebuild resets the lineage): codes
+    // are vec_id-monotone append-only AND the codebook is frozen
+    // across appends, so any snapshot serves as-of with one id cut
+    IndexManifest.rebuild(path, "ivf-sq8", true, emb, "vec_id",
+      _ => Map("cells" -> cents.size.toLong, "dims" -> mins.length.toLong,
+        "partition_by_cell" -> (if (partitionByCell) 1L else 0L),
+        "train_iters" -> trainIters.toLong))(
       () => {
         val w = laid.write.mode("overwrite")
         (if (partitionByCell) w.partitionBy("cell") else w)
@@ -1590,17 +1583,7 @@ object Similarity {
       () => mins.zip(scales).zipWithIndex
         .map { case ((mn, sc), i) => (i + 1L, mn, sc) }
         .toDF("dim", "mn", "sc").write.mode("overwrite")
-        .parquet(s"$path/quant"),
-      () => wm = IndexManifest.watermark(emb, "vec_id")))
-    val (rows, maxId) = wm
-    // versioned (the d153 device; rebuild resets the lineage): codes
-    // are vec_id-monotone append-only AND the codebook is frozen
-    // across appends, so any snapshot serves as-of with one id cut
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest("ivf-sq8",
-      Map("cells" -> cents.size.toLong, "dims" -> mins.length.toLong,
-        "partition_by_cell" -> (if (partitionByCell) 1L else 0L),
-        "train_iters" -> trainIters.toLong),
-      rows, maxId))
+        .parquet(s"$path/quant"))
   }
 
   /** The IVF+SQ8 index's driver-resident constants — (cents, mins,
@@ -1632,38 +1615,29 @@ object Similarity {
     * recorded layout — a cell-partitioned index gains files inside
     * existing cell directories, so pruned probes keep pruning.
     */
-  def appendIvfSq8Index(increment: DataFrame, path: String): Unit = {
-    val inc = IndexManifest.beginAppend(increment, "vec_id",
-      IndexManifest.require(path, "ivf-sq8"), path)
-    if (inc.isEmpty) return
-    val man = inc.man
-    // codebook reload and the orphan guard are independent store READS
-    // — overlapped; both complete before the data write below can start
-    // (awaitAll doc), so the guard still strictly precedes the mutation
-    var consts: (Seq[(Long, Seq[Double])], Seq[Double], Seq[Double]) = null
-    IndexManifest.awaitAll(Seq(
-      () => consts = loadSq8Constants(increment.sparkSession, path),
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(increment.sparkSession, s"$path/codes"), "vec_id",
-        man, path)))
-    val (cents, mins, scales) = consts
-    // widened + laid out like saveIvfSq8Index (the append is the same
-    // assignment+encode pass over the increment)
-    val n = normalized(graft.sources.ScanParallelism.widen(increment))
-    val codes = n.withColumn("cell",
-        (-array_max(scoresFor(cents)).getField("nid")).cast("long"))
-      .withColumn("codes", sqEncode(typedLit(mins), typedLit(scales)))
-      .select(col("vec_id"), col("cell"), col("codes"))
-    val byCell = man.params.getOrElse("partition_by_cell", 0L) == 1L
-    val laid =
-      if (byCell)
-        graft.sources.ScanParallelism.layoutForWrite(
-          codes, cents.size, Seq(col("cell")))
-      else codes
-    val w = laid.write.mode("append")
-    (if (byCell) w.partitionBy("cell") else w).parquet(s"$path/codes")
-    IndexManifest.writeVersioned(path, inc.advanced)
-  }
+  def appendIvfSq8Index(increment: DataFrame, path: String): Unit =
+    IndexManifest.append(path, IndexManifest.require(path, "ivf-sq8"), true,
+        increment, "vec_id", Seq("codes" -> "vec_id"), _.man.params) { inc =>
+      // the codebook reload is a store READ, so it overlaps the guard
+      val (cents, mins, scales) = loadSq8Constants(increment.sparkSession, path)
+      // widened + laid out like saveIvfSq8Index (the append is the same
+      // assignment+encode pass over the increment)
+      val n = normalized(graft.sources.ScanParallelism.widen(increment))
+      val codes = n.withColumn("cell",
+          (-array_max(scoresFor(cents)).getField("nid")).cast("long"))
+        .withColumn("codes", sqEncode(typedLit(mins), typedLit(scales)))
+        .select(col("vec_id"), col("cell"), col("codes"))
+      val byCell = inc.man.params.getOrElse("partition_by_cell", 0L) == 1L
+      val laid =
+        if (byCell)
+          graft.sources.ScanParallelism.layoutForWrite(
+            codes, cents.size, Seq(col("cell")))
+        else codes
+      Seq(() => {
+        val w = laid.write.mode("append")
+        (if (byCell) w.partitionBy("cell") else w).parquet(s"$path/codes")
+      })
+    }
 
   /** SYNC a persisted IVF+SQ8 index to the current corpus (e34): the
     * shared [[IndexManifest.sync]] policy. The append arm
@@ -2264,31 +2238,20 @@ object Similarity {
     */
   def saveSrpIndex(emb: DataFrame, path: String, outDims: Int = 16,
       radius: Int = 3): Unit = {
-    // rebuild = new lineage; clear versions BEFORE the data overwrite
-    // (crash-window ordering, ADVICE r12)
-    IndexManifest.clearVersions(path)
-    // one write task per (bpos, bval) directory (round-13 verdict #1:
-    // the 64-directory write ran from ONE task; the explicit-N keyed
-    // repartition is what AQE cannot coalesce away)
-    // the blocks write and the watermark agg are order-independent
-    // (manifest flip below is the commit point) — overlapped
-    // (IndexManifest.awaitAll doc)
-    var wm: (Long, Long) = (0L, -1L)
-    IndexManifest.awaitAll(Seq(
+    // versioned (the d153 device): the block table is vec_id-monotone
+    // append-only, so every snapshot is servable as-of by one id cut;
+    // an overwrite rebuild resets the lineage. One write task per
+    // (bpos, bval) directory (round-13 verdict #1: the 64-directory
+    // write ran from ONE task; the explicit-N keyed repartition is what
+    // AQE cannot coalesce away)
+    IndexManifest.rebuild(path, "srp", true, emb, "vec_id",
+      _ => Map("out_dims" -> outDims.toLong, "radius" -> radius.toLong))(
       () => graft.sources.ScanParallelism.layoutForWrite(
           srpBlockTable(emb, outDims, radius),
           (radius + 1) << (outDims / (radius + 1)),
           Seq(col("bpos"), col("bval")))
         .write.mode("overwrite").partitionBy("bpos", "bval")
-        .parquet(s"$path/blocks"),
-      () => wm = IndexManifest.watermark(emb, "vec_id")))
-    val (rows, maxId) = wm
-    // versioned (the d153 device): the block table is vec_id-monotone
-    // append-only, so every snapshot is servable as-of by one id cut;
-    // an overwrite rebuild resets the lineage
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest("srp",
-      Map("out_dims" -> outDims.toLong, "radius" -> radius.toLong),
-      rows, maxId))
+        .parquet(s"$path/blocks"))
   }
 
   /** APPEND to a persisted SRP index (e42) — the shared prelude
@@ -2299,24 +2262,19 @@ object Similarity {
     * block files are never read or rewritten; new files land inside
     * existing (bpos, bval) directories so pruned probes keep pruning.
     */
-  def appendSrpIndex(increment: DataFrame, path: String): Unit = {
-    val inc = IndexManifest.beginAppend(increment, "vec_id",
-      IndexManifest.require(path, "srp"), path)
-    if (inc.isEmpty) return
-    val man = inc.man
-    IndexManifest.requireNoOrphans(
-      Tables.readParquet(increment.sparkSession, s"$path/blocks"), "vec_id", man, path)
-    val (outDims, radius) =
-      (man.params("out_dims").toInt, man.params("radius").toInt)
-    // same one-task-per-directory write layout as saveSrpIndex
-    graft.sources.ScanParallelism.layoutForWrite(
-        srpBlockTable(increment, outDims, radius),
-        (radius + 1) << (outDims / (radius + 1)),
-        Seq(col("bpos"), col("bval")))
-      .write.mode("append").partitionBy("bpos", "bval")
-      .parquet(s"$path/blocks")
-    IndexManifest.writeVersioned(path, inc.advanced)
-  }
+  def appendSrpIndex(increment: DataFrame, path: String): Unit =
+    IndexManifest.append(path, IndexManifest.require(path, "srp"), true,
+        increment, "vec_id", Seq("blocks" -> "vec_id"), _.man.params) { inc =>
+      val (outDims, radius) =
+        (inc.man.params("out_dims").toInt, inc.man.params("radius").toInt)
+      // same one-task-per-directory write layout as saveSrpIndex
+      Seq(() => graft.sources.ScanParallelism.layoutForWrite(
+          srpBlockTable(increment, outDims, radius),
+          (radius + 1) << (outDims / (radius + 1)),
+          Seq(col("bpos"), col("bval")))
+        .write.mode("append").partitionBy("bpos", "bval")
+        .parquet(s"$path/blocks"))
+    }
 
   /** SYNC a persisted SRP index to the current corpus (e43): the
     * shared [[IndexManifest.sync]] policy. The append arm
@@ -2638,15 +2596,12 @@ object Similarity {
       beam: Int, rounds: Int, knnK: Int, bits: Int = 6,
       entries: Int = 4): DataFrame = {
     // the nav-graph build and the exact baseline are independent
-    // multi-job subcomputations — overlapped (IndexManifest.awaitAll
-    // doc; guide §2.6)
-    var edges: DataFrame = null
-    var exact: DataFrame = null
-    IndexManifest.awaitAll(Seq(
-      () => edges = navGraph(emb, knnK, bits).localCheckpoint(true),
-      () => exact = cosineTopK(emb, queryPred, k)
+    // multi-job subcomputations — overlapped (guide §2.6)
+    val (edges, exact) = graft.Overlap(
+      navGraph(emb, knnK, bits).localCheckpoint(true),
+      cosineTopK(emb, queryPred, k)
         .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true))) // read per round + once for the count
+        .localCheckpoint(true)) // read per round + once for the count
     val beams = beamWalk(emb, edges, queryPred, k, beam, rounds, entries)
     val nq = exact.agg(countDistinct(col("query_id")).cast("long").as("n_queries"))
     beams.map { case (i, b) =>
@@ -2677,17 +2632,13 @@ object Similarity {
       beam: Int, rounds: Int, knnK: Int, bits: Int = 6,
       kCenters: Int = 4): DataFrame = {
     // entry selection, nav-graph build and the exact baseline are three
-    // independent multi-job subcomputations — overlapped
-    // (IndexManifest.awaitAll doc; guide §2.6)
-    var ids: Seq[Long] = null
-    var edges: DataFrame = null
-    var exact: DataFrame = null
-    IndexManifest.awaitAll(Seq(
-      () => ids = kCenterGreedy(emb, kCenters).collect().map(_.getLong(1)).toSeq,
-      () => edges = navGraph(emb, knnK, bits).localCheckpoint(true),
-      () => exact = cosineTopK(emb, queryPred, k)
+    // independent multi-job subcomputations — overlapped (guide §2.6)
+    val (ids, edges, exact) = graft.Overlap(
+      kCenterGreedy(emb, kCenters).collect().map(_.getLong(1)).toSeq,
+      navGraph(emb, knnK, bits).localCheckpoint(true),
+      cosineTopK(emb, queryPred, k)
         .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
     val beams = beamWalk(emb, edges,
       queryPred, k, beam, rounds, entries = ids.size, entryIds = Some(ids))
     val nq = exact.agg(countDistinct(col("query_id")).cast("long").as("n_queries"))
@@ -2709,10 +2660,10 @@ object Similarity {
     */
   def saveNavGraph(emb: DataFrame, path: String, knnK: Int,
       bits: Int = 6): Unit = {
-    navGraph(emb, knnK, bits).write.mode("overwrite").parquet(s"$path/edges")
-    val (rows, maxId) = IndexManifest.watermark(emb, "vec_id")
-    IndexManifest.write(path, IndexManifest.Manifest("nav-graph",
-      Map("knn_k" -> knnK.toLong, "bits" -> bits.toLong), rows, maxId))
+    IndexManifest.rebuild(path, "nav-graph", false, emb, "vec_id",
+      _ => Map("knn_k" -> knnK.toLong, "bits" -> bits.toLong))(
+      () => navGraph(emb, knnK, bits).write.mode("overwrite")
+        .parquet(s"$path/edges"))
   }
 
   /** Graph-walk serving from the persisted [[saveNavGraph]] store —
@@ -3240,40 +3191,34 @@ object Similarity {
     // themselves (every crash state between the nrow witness above and
     // the manifest flip below is detected regardless of which subset
     // landed), and each is a tiny dims/dims²-row job — run them
-    // concurrently with each other AND with the derivation so the
-    // driver does not serialize ~6 sub-second jobs (guide §2.6 overlap;
-    // measured: the serial chain dominated the post-stats phase).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val statsWrites = Seq(
-      Future(dSx.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deltas/v$ver/sx")),
-      Future(dSxx.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deltas/v$ver/sxx")),
-      Future(sx.coalesce(1).write.mode("overwrite").parquet(s"$path/sx")),
-      Future(sxx.coalesce(1).write.mode("overwrite").parquet(s"$path/sxx")))
-    val (mu, covDf) = covFromStats(n, sx, sxx)
-    val cov = covDf.localCheckpoint(true)
-    // the power iterates chain dims²×dims joins — one composed plan,
-    // checkpointed once at the end (3 short chains never need a
-    // per-iteration lineage cut; each cut was a full extra job)
-    var v = seedVec(spark, dim, 0)
-    for (_ <- 1 to iters) v = matvec(cov, v)
-    val vc = v.localCheckpoint(true)
-    val servingWrites = Seq(
-      Future(mu.zipWithIndex.map { case (x, j) => (j, x) }.toSeq
-        .toDF("j", "mu").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/mean")),
-      Future(cov.coalesce(1).write.mode("overwrite").parquet(s"$path/cov")),
-      Future(vc.coalesce(1).write.mode("overwrite").parquet(s"$path/iter")))
-    // await EVERY future before propagating any failure (round-13
-    // advice #5: rethrowing on the first failed Await left sibling
-    // writes in flight — a caller reacting by rebuilding in-process
-    // would race them against clearVersions/delete)
-    val outcomes = (statsWrites ++ servingWrites)
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
+    // concurrently with each other AND with the derivation and its three
+    // serving writes, so the driver does not serialize ~6 sub-second
+    // jobs (guide §2.6 overlap; measured: the serial chain dominated the
+    // post-stats phase). Every write has finished before a failure
+    // propagates (round-13 advice #5: a caller reacting by rebuilding
+    // in-process would otherwise race them against clearVersions).
+    graft.Overlap.all(Seq(
+      () => dSx.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/deltas/v$ver/sx"),
+      () => dSxx.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/deltas/v$ver/sxx"),
+      () => sx.coalesce(1).write.mode("overwrite").parquet(s"$path/sx"),
+      () => sxx.coalesce(1).write.mode("overwrite").parquet(s"$path/sxx"),
+      () => {
+        val (mu, covDf) = covFromStats(n, sx, sxx)
+        val cov = covDf.localCheckpoint(true)
+        // the power iterates chain dims²×dims joins — one composed plan,
+        // checkpointed once at the end (3 short chains never need a
+        // per-iteration lineage cut; each cut was a full extra job)
+        val vc = (1 to iters).foldLeft(seedVec(spark, dim, 0))((v, _) =>
+          matvec(cov, v)).localCheckpoint(true)
+        graft.Overlap.all(Seq(
+          () => mu.zipWithIndex.map { case (x, j) => (j, x) }.toSeq
+            .toDF("j", "mu").coalesce(1)
+            .write.mode("overwrite").parquet(s"$path/mean"),
+          () => cov.coalesce(1).write.mode("overwrite").parquet(s"$path/cov"),
+          () => vc.coalesce(1).write.mode("overwrite").parquet(s"$path/iter")))
+      }))
     // manifest flip strictly LAST — it is the commit point
     IndexManifest.writeVersioned(path, IndexManifest.Manifest("spectral",
       Map("dims" -> dim.toLong, "iters" -> iters.toLong), rows, maxId))

@@ -436,11 +436,9 @@ object TextAnalysis {
     * shared manifest (kind "bpe").
     */
   def saveBpeModel(docs: DataFrame, path: String, nMerges: Int = 5): Unit = {
-    import graft.sources.IndexManifest
-    bpeTrain(docs, nMerges).write.mode("overwrite").parquet(s"$path/merges")
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("bpe",
-      Map("n_merges" -> nMerges.toLong), rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "bpe", false, docs, "doc_id",
+      _ => Map("n_merges" -> nMerges.toLong))(
+      () => bpeTrain(docs, nMerges).write.mode("overwrite").parquet(s"$path/merges"))
   }
 
   /** Encode a corpus with a persisted BPE model ([[saveBpeModel]]) —
@@ -977,13 +975,11 @@ object TextAnalysis {
     * recovers by rebuild).
     */
   def saveCardStore(docs: DataFrame, path: String, p: Int = 8): Unit = {
-    import graft.sources.IndexManifest
     val (regs, state) = cardPieces(docs, p)
-    regs.coalesce(1).write.mode("overwrite").parquet(s"$path/regs")
-    state.coalesce(1).write.mode("overwrite").parquet(s"$path/state")
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("card",
-      Map("p" -> p.toLong), rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "card", false, docs, "doc_id",
+      _ => Map("p" -> p.toLong))(
+      () => regs.coalesce(1).write.mode("overwrite").parquet(s"$path/regs"),
+      () => state.coalesce(1).write.mode("overwrite").parquet(s"$path/state"))
   }
 
   /** Fold an increment into the card store. Write order is the crash
@@ -1145,27 +1141,35 @@ object TextAnalysis {
     */
   def saveBm25Index(docs: DataFrame, path: String, termBuckets: Int = 0): Unit = {
     require(termBuckets >= 0, s"termBuckets=$termBuckets")
-    // rebuild = new lineage; versions die before the data overwrite
-    graft.sources.IndexManifest.clearVersions(path)
     val w = split(col("text"), " ")
     val postings = docs.select(col("doc_id"), explode(w).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).cast("long").as("tf"))
-    // termBuckets > 0 (d90): the scaladoc's 100 TB layout made real —
-    // postings land PARTITIONED BY the term's hash60 bucket, so a
-    // query's probe prunes whole bucket directories at the file-index
-    // layer (PartitionFilters) before the term filter even pushes.
-    // The bucket is a pure term function (the shared hash60), so the
-    // reader derives each query term's bucket driver-side (hash60Jvm,
-    // spec-pinned equal to the Column form) — no bucket map to store.
-    // the postings/lens writes and the corpus-constants agg are
-    // order-independent for a REBUILD (manifest flip below is the
-    // commit point) — overlapped (IndexManifest.awaitAll doc). The
-    // bucketed postings layout uses an EXPLICIT partition count when
-    // the frame is gated small, so AQE cannot coalesce the write back
-    // to one task (the round-13 failure mode of bare keyed repartition).
-    var c: org.apache.spark.sql.Row = null
-    graft.sources.IndexManifest.awaitAll(Seq(
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // the corpus constants ride the rebuild's agg: n_docs is its count,
+    // sum_dl its extra column. sum_dl also rides the manifest so (a) the
+    // append path merges constants without trusting a possibly-mid-crash
+    // consts table and (b) every VERSION pins its own (n_docs, sum_dl)
+    // pair for as-of serving
+    graft.sources.IndexManifest.rebuild(path, "bm25", true, docs, "doc_id",
+      c => {
+        Seq((c.getLong(0), c.getLong(2))).toDF("n_docs", "sum_dl")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
+        Map("term_buckets" -> termBuckets.toLong, "sum_dl" -> c.getLong(2))
+      },
+      coalesce(sum(size(w)).cast("long"), lit(0L)))(
+      // termBuckets > 0 (d90): the scaladoc's 100 TB layout made real —
+      // postings land PARTITIONED BY the term's hash60 bucket, so a
+      // query's probe prunes whole bucket directories at the file-index
+      // layer (PartitionFilters) before the term filter even pushes.
+      // The bucket is a pure term function (the shared hash60), so the
+      // reader derives each query term's bucket driver-side (hash60Jvm,
+      // spec-pinned equal to the Column form) — no bucket map to store.
+      // The bucketed postings layout uses an EXPLICIT partition count
+      // when the frame is gated small, so AQE cannot coalesce the write
+      // back to one task (the round-13 failure mode of bare keyed
+      // repartition).
       () =>
         if (termBuckets > 0) {
           val tb = postings.withColumn("tb",
@@ -1179,24 +1183,7 @@ object TextAnalysis {
           postings.write.mode("overwrite").parquet(s"$path/postings")
         },
       () => docs.select(col("doc_id"), size(w).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/lens"),
-      // the corpus constants and the watermark (count, max id) in one agg
-      () => c = docs.agg(count(lit(1)).cast("long"),
-        coalesce(sum(size(w)).cast("long"), lit(0L)),
-        max(col("doc_id").cast("long"))).head()))
-    val (nDocs, sumDl) = (c.getLong(0), c.getLong(1))
-    val maxId = if (c.isNullAt(2)) -1L else c.getLong(2)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
-    // sum_dl rides the manifest so (a) the append path merges constants
-    // without trusting a possibly-mid-crash consts table and (b) every
-    // VERSION pins its own (n_docs, sum_dl) pair for as-of serving
-    graft.sources.IndexManifest.writeVersioned(path,
-      graft.sources.IndexManifest.Manifest(
-        "bm25", Map("term_buckets" -> termBuckets.toLong,
-          "sum_dl" -> sumDl), nDocs, maxId))
+        .write.mode("overwrite").parquet(s"$path/lens"))
   }
 
   /** APPEND to a persisted BM25 index (d159) — the round-13
@@ -1222,44 +1209,38 @@ object TextAnalysis {
       throw new IndexManifestException(
         s"bm25 index at $path predates incremental append (no 'sum_dl') — rebuild once"))
     val w = split(col("text"), " ")
-    val inc = IndexManifest.beginAppend(increment, "doc_id", man, path,
-      coalesce(sum(size(w)).cast("long"), lit(0L)))
-    if (inc.isEmpty) return
-    val incSum = inc.stats.getLong(3)
-    // BOTH tables guarded (the appends below are concurrent, so a crash
-    // can commit either first — the old sequential order guaranteed
-    // lens ⇒ postings); the guards are pure reads, overlapped
-    IndexManifest.awaitAll(Seq(
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(increment.sparkSession, s"$path/postings"), "doc_id",
-        man, path),
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(increment.sparkSession, s"$path/lens"), "doc_id",
-        man, path)))
-    val postings = increment.select(col("doc_id"), explode(w).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("tf"))
-    val tb = man.params.getOrElse("term_buckets", 0L)
-    IndexManifest.awaitAll(Seq(
-      () =>
-        if (tb > 0L) {
-          val tbl = postings
-            .withColumn("tb", pmod(Dedup.hash60(col("term")), lit(tb)))
-          val laid = graft.sources.ScanParallelism.layoutForWrite(
-            tbl, tb.toInt, Seq(col("tb")))
-          (if (laid eq tbl) tbl.repartition(col("tb")) else laid)
-            .write.mode("append").partitionBy("tb").parquet(s"$path/postings")
-        } else {
-          postings.write.mode("append").parquet(s"$path/postings")
-        },
-      () => increment.select(col("doc_id"), size(w).cast("long").as("dl"))
-        .write.mode("append").parquet(s"$path/lens")))
     val spark = increment.sparkSession
     import spark.implicits._
-    Seq((inc.advanced.corpusRows, baseSum + incSum)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
-    IndexManifest.writeVersioned(path,
-      inc.advanced.copy(params = man.params + ("sum_dl" -> (baseSum + incSum))))
+    // the constants merge reads the MANIFEST's sum_dl; consts is
+    // replaced only after both table appends have landed
+    IndexManifest.append(path, man, true, increment, "doc_id",
+      Seq("postings" -> "doc_id", "lens" -> "doc_id"),
+      inc => {
+        val sumDl = baseSum + inc.stats.getLong(3)
+        Seq((inc.advanced.corpusRows, sumDl)).toDF("n_docs", "sum_dl")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
+        man.params + ("sum_dl" -> sumDl)
+      },
+      coalesce(sum(size(w)).cast("long"), lit(0L))) { _ =>
+      val postings = increment.select(col("doc_id"), explode(w).as("term"))
+        .groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).cast("long").as("tf"))
+      val tb = man.params.getOrElse("term_buckets", 0L)
+      Seq(
+        () =>
+          if (tb > 0L) {
+            val tbl = postings
+              .withColumn("tb", pmod(Dedup.hash60(col("term")), lit(tb)))
+            val laid = graft.sources.ScanParallelism.layoutForWrite(
+              tbl, tb.toInt, Seq(col("tb")))
+            (if (laid eq tbl) tbl.repartition(col("tb")) else laid)
+              .write.mode("append").partitionBy("tb").parquet(s"$path/postings")
+          } else {
+            postings.write.mode("append").parquet(s"$path/postings")
+          },
+        () => increment.select(col("doc_id"), size(w).cast("long").as("dl"))
+          .write.mode("append").parquet(s"$path/lens"))
+    }
   }
 
   /** Maintenance for the BM25 index: the shared
@@ -1924,7 +1905,6 @@ object TextAnalysis {
     * engine that sums the persisted decimals reproduces scores exactly.
     */
   def saveBigramLm(refDocs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
     val g = bigrams(refDocs)
     val c2 = g.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
       .localCheckpoint(true)
@@ -1932,20 +1912,19 @@ object TextAnalysis {
       .localCheckpoint(true)
     val vocab = c2.select(explode(array(col("prev"), col("cur"))).as("t"))
       .agg(countDistinct(col("t")).cast("long").as("v"))
-    c2.join(c1, Seq("prev")).crossJoin(broadcast(vocab))
-      .select(col("prev"), col("cur"), expr(
-        "CAST(ln(CAST(c1 + v AS DOUBLE) / CAST(c2 + 1 AS DOUBLE)) AS DECIMAL(28,8))").as("nll"))
-      .write.mode("overwrite").parquet(s"$path/model")
-    c1.crossJoin(broadcast(vocab))
-      .select(col("prev"), expr(
-        "CAST(ln(CAST(c1 + v AS DOUBLE)) AS DECIMAL(28,8))").as("unseen_nll"))
-      .write.mode("overwrite").parquet(s"$path/ctx")
-    vocab.select(col("v"), expr(
-        "CAST(ln(CAST(v AS DOUBLE)) AS DECIMAL(28,8))").as("oov_nll"))
-      .write.mode("overwrite").parquet(s"$path/consts")
-    val (rows, maxId) = IndexManifest.watermark(refDocs, "doc_id")
-    IndexManifest.write(path,
-      IndexManifest.Manifest("bigram-lm", Map.empty, rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "bigram-lm", false, refDocs,
+      "doc_id", _ => Map.empty)(
+      () => c2.join(c1, Seq("prev")).crossJoin(broadcast(vocab))
+        .select(col("prev"), col("cur"), expr(
+          "CAST(ln(CAST(c1 + v AS DOUBLE) / CAST(c2 + 1 AS DOUBLE)) AS DECIMAL(28,8))").as("nll"))
+        .write.mode("overwrite").parquet(s"$path/model"),
+      () => c1.crossJoin(broadcast(vocab))
+        .select(col("prev"), expr(
+          "CAST(ln(CAST(c1 + v AS DOUBLE)) AS DECIMAL(28,8))").as("unseen_nll"))
+        .write.mode("overwrite").parquet(s"$path/ctx"),
+      () => vocab.select(col("v"), expr(
+          "CAST(ln(CAST(v AS DOUBLE)) AS DECIMAL(28,8))").as("oov_nll"))
+        .write.mode("overwrite").parquet(s"$path/consts"))
   }
 
   /** Score any corpus against a persisted [[saveBigramLm]] model —
@@ -2338,19 +2317,19 @@ object TextAnalysis {
     val postings = docs.select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
       .select(col("term"), col("doc_id"), col("pos").cast("long").as("pos"))
-    if (termBuckets > 0) {
-      postings
-        .withColumn("tb",
-          pmod(Dedup.hash60(col("term")), lit(termBuckets.toLong)))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$path/postings")
-    } else {
-      postings.write.mode("overwrite").parquet(s"$path/postings")
-    }
-    val (rows, maxId) = graft.sources.IndexManifest.watermark(docs, "doc_id")
-    graft.sources.IndexManifest.write(path, graft.sources.IndexManifest.Manifest(
-      "pos-postings", Map("term_buckets" -> termBuckets.toLong), rows, maxId))
+    graft.sources.IndexManifest.rebuild(path, "pos-postings", false, docs,
+      "doc_id", _ => Map("term_buckets" -> termBuckets.toLong))(
+      () =>
+        if (termBuckets > 0) {
+          postings
+            .withColumn("tb",
+              pmod(Dedup.hash60(col("term")), lit(termBuckets.toLong)))
+            .repartition(col("tb"))
+            .write.mode("overwrite").partitionBy("tb")
+            .parquet(s"$path/postings")
+        } else {
+          postings.write.mode("overwrite").parquet(s"$path/postings")
+        })
   }
 
   /** Exact phrase search over the persisted positional index (d100):
@@ -2801,32 +2780,20 @@ object TextAnalysis {
     * and every consumer (d105-d110) reads parquet.
     */
   def saveSuffixIndex(docs: DataFrame, path: String, global: Boolean): Unit = {
-    import graft.sources.IndexManifest
-    // the two table writes and the watermark agg are order-independent
-    // (manifest write below is the commit point) — overlapped
-    // (IndexManifest.awaitAll doc); the lcp derivation's own descent
-    // jobs overlap the sa write as a bonus
-    var wm: (Long, Long) = (0L, -1L)
-    if (global) {
-      val (sa, _, pairs) = globalLcpParts(docs)
-      IndexManifest.awaitAll(Seq(
-        () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
-          .write.mode("overwrite").parquet(s"$path/sa"),
-        () => pairs.select(col("rnk"), col("lcp"), col("n_occ"), col("n_docs"))
-          .write.mode("overwrite").parquet(s"$path/lcp"),
-        () => wm = IndexManifest.watermark(docs, "doc_id")))
-    } else {
-      val (sa, levels) = suffixLevels(docs)
-      IndexManifest.awaitAll(Seq(
-        () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
-          .write.mode("overwrite").parquet(s"$path/sa"),
-        () => perDocLcp(sa, levels)
-          .write.mode("overwrite").parquet(s"$path/lcp"),
-        () => wm = IndexManifest.watermark(docs, "doc_id")))
-    }
-    val (rows, maxId) = wm
-    IndexManifest.write(path, IndexManifest.Manifest("suffix-array",
-      Map("global" -> (if (global) 1L else 0L)), rows, maxId))
+    // the per-doc lcp derivation's own descent jobs overlap the sa write
+    val (sa, lcp) =
+      if (global) {
+        val (sa, _, pairs) = globalLcpParts(docs)
+        (sa, () => pairs.select(col("rnk"), col("lcp"), col("n_occ"), col("n_docs")))
+      } else {
+        val (sa, levels) = suffixLevels(docs)
+        (sa, () => perDocLcp(sa, levels))
+      }
+    graft.sources.IndexManifest.rebuild(path, "suffix-array", false, docs,
+      "doc_id", _ => Map("global" -> (if (global) 1L else 0L)))(
+      () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
+        .write.mode("overwrite").parquet(s"$path/sa"),
+      () => lcp().write.mode("overwrite").parquet(s"$path/lcp"))
   }
 
   /** The (sa, lcp) frames of the suffix-array artifact at `path`,
@@ -2861,30 +2828,18 @@ object TextAnalysis {
     * ([[graft.sources.IndexManifest.beginAppend]]), orphan check before
     * writing, manifest flip last.
     */
-  def appendSuffixIndex(newDocs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val inc = IndexManifest.beginAppend(newDocs, "doc_id",
-      IndexManifest.require(path, "suffix-array", Map("global" -> 0L)), path)
-    if (inc.isEmpty) return
-    val (man, spark) = (inc.man, newDocs.sparkSession)
-    // BOTH tables guarded (the appends below are concurrent, so a crash
-    // can commit either first), overlapped with the increment's ladder
-    // — the guards are pure reads and everything completes before any
-    // outcome propagates (IndexManifest.awaitAll doc)
-    var res: (DataFrame, Seq[(Long, DataFrame)]) = null
-    IndexManifest.awaitAll(Seq(
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(spark, s"$path/sa"), "doc_id", man, path),
-      () => IndexManifest.requireNoOrphans(
-        Tables.readParquet(spark, s"$path/lcp"), "doc_id", man, path),
-      () => res = suffixLevels(newDocs)))
-    val (sa, levels) = res
-    IndexManifest.awaitAll(Seq(
-      () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
-        .write.mode("append").parquet(s"$path/sa"),
-      () => perDocLcp(sa, levels).write.mode("append").parquet(s"$path/lcp")))
-    IndexManifest.write(path, inc.advanced)
-  }
+  def appendSuffixIndex(newDocs: DataFrame, path: String): Unit =
+    graft.sources.IndexManifest.append(path,
+        graft.sources.IndexManifest.require(path, "suffix-array", Map("global" -> 0L)),
+        false, newDocs, "doc_id", Seq("sa" -> "doc_id", "lcp" -> "doc_id"),
+        _.man.params) { _ =>
+      // the increment's ladder overlaps the guards
+      val (sa, levels) = suffixLevels(newDocs)
+      Seq(
+        () => sa.select(col("doc_id"), col("pos"), col("rank").as("rnk"))
+          .write.mode("append").parquet(s"$path/sa"),
+        () => perDocLcp(sa, levels).write.mode("append").parquet(s"$path/lcp"))
+    }
 
   /** Maintenance for the per-document suffix store: the shared
     * [[graft.sources.IndexManifest.sync]] policy.

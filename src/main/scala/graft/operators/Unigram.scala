@@ -200,26 +200,22 @@ object Unigram {
     */
   def saveUnigramModel(docs: DataFrame, path: String, maxPieceLen: Int = 4,
       emRounds: Int = 2): Unit = {
-    import graft.sources.IndexManifest
     val words = vocab(docs).localCheckpoint(true)
     val maxWordLen = words.agg(max(col("wlen"))).head().getInt(0)
     val seed = seedModel(words, maxPieceLen).localCheckpoint(true)
-    var model = seed
-    for (_ <- 1 to emRounds) {
-      val segs = viterbi(words, model, maxWordLen, maxPieceLen)
-      model = reestimate(segs, seed).localCheckpoint(true)
-    }
-    model.write.mode("overwrite").parquet(s"$path/model")
-    // the SEGMENTATION MAP is the serving artifact proper: a tokenizer
-    // in production is a lookup table — encoding re-runs Viterbi only
-    // for vocabulary the training corpus never saw
-    viterbi(words, model, maxWordLen, maxPieceLen)
-      .select(col("word"), col("np"))
-      .write.mode("overwrite").parquet(s"$path/segmap")
-    val (rows, maxId) = IndexManifest.watermark(docs, "doc_id")
-    IndexManifest.write(path, IndexManifest.Manifest("unigram-lm",
-      Map("max_piece_len" -> maxPieceLen.toLong,
-        "em_rounds" -> emRounds.toLong), rows, maxId))
+    val model = (1 to emRounds).foldLeft(seed)((m, _) =>
+      reestimate(viterbi(words, m, maxWordLen, maxPieceLen), seed)
+        .localCheckpoint(true))
+    graft.sources.IndexManifest.rebuild(path, "unigram-lm", false, docs, "doc_id",
+      _ => Map("max_piece_len" -> maxPieceLen.toLong,
+        "em_rounds" -> emRounds.toLong))(
+      () => model.write.mode("overwrite").parquet(s"$path/model"),
+      // the SEGMENTATION MAP is the serving artifact proper: a tokenizer
+      // in production is a lookup table — encoding re-runs Viterbi only
+      // for vocabulary the training corpus never saw
+      () => viterbi(words, model, maxWordLen, maxPieceLen)
+        .select(col("word"), col("np"))
+        .write.mode("overwrite").parquet(s"$path/segmap"))
   }
 
   /** Encode a corpus against a persisted [[saveUnigramModel]] store

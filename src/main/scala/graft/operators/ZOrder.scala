@@ -58,17 +58,9 @@ object ZOrder {
       s"bucketBits=$bucketBits must be even and < ${2 * bits}")
     val g = eventGrid(events, bits)
       .withColumn("zbucket", expr(s"zkey >> ${2 * bits - bucketBits}"))
-    // a rebuild starts a new lineage — and the old lineage's version
-    // files must die BEFORE the data overwrite: a crash between the
-    // rewrite and a later sweep would leave snapshots claiming
-    // watermarks the rewritten data no longer has (losing versions on
-    // crash is safe; serving wrong ones is not — ADVICE r12)
-    IndexManifest.clearVersions(path)
-    g.write.mode("overwrite").partitionBy("zbucket").parquet(s"$path/data")
-    val (rows, maxId) = IndexManifest.watermark(events, "event_id")
-    IndexManifest.writeVersioned(path, IndexManifest.Manifest("zorder",
-      Map("bits" -> bits.toLong, "bucket_bits" -> bucketBits.toLong),
-      rows, maxId))
+    IndexManifest.rebuild(path, "zorder", true, events, "event_id",
+      _ => Map("bits" -> bits.toLong, "bucket_bits" -> bucketBits.toLong))(
+      () => g.write.mode("overwrite").partitionBy("zbucket").parquet(s"$path/data"))
   }
 
   /** Id-monotone append into the z-ordered store (d146) — clustered
@@ -81,23 +73,18 @@ object ZOrder {
     * are the shared prelude ([[IndexManifest.beginAppend]]) and orphan
     * detection for the crashed-append window.
     */
-  def appendZOrderedStore(newEvents: DataFrame, path: String): Unit = {
-    val inc = IndexManifest.beginAppend(newEvents, "event_id",
-      IndexManifest.require(path, "zorder"), path)
-    if (inc.isEmpty) return
-    val man = inc.man
-    IndexManifest.requireNoOrphans(
-      Tables.readParquet(newEvents.sparkSession, s"$path/data"), "event_id", man, path)
-    val bits = man.params("bits").toInt
-    val bucketBits = man.params("bucket_bits").toInt
-    eventGrid(newEvents, bits)
-      .withColumn("zbucket", expr(s"zkey >> ${2 * bits - bucketBits}"))
-      .write.mode("append").partitionBy("zbucket").parquet(s"$path/data")
+  def appendZOrderedStore(newEvents: DataFrame, path: String): Unit =
     // every append is a new SNAPSHOT VERSION (IndexManifest.writeVersioned
     // doc): history rows are never rewritten, so a version is exactly
     // its watermark and zRectQueryAt can time-travel with one id cut
-    IndexManifest.writeVersioned(path, inc.advanced)
-  }
+    IndexManifest.append(path, IndexManifest.require(path, "zorder"), true,
+        newEvents, "event_id", Seq("data" -> "event_id"), _.man.params) { inc =>
+      val bits = inc.man.params("bits").toInt
+      val bucketBits = inc.man.params("bucket_bits").toInt
+      Seq(() => eventGrid(newEvents, bits)
+        .withColumn("zbucket", expr(s"zkey >> ${2 * bits - bucketBits}"))
+        .write.mode("append").partitionBy("zbucket").parquet(s"$path/data"))
+    }
 
   /** The z-buckets a query rectangle can touch — pure driver arithmetic
     * over the 2^bucketBits bucket prefixes: each bucket's interleaved

@@ -40,6 +40,12 @@ class StaleIndexException(msg: String) extends RuntimeException(msg)
   *  3. MAINTENANCE — one fresh/append/rebuild policy over the watermark
   *     ([[IndexManifest.sync]]) and one append prelude
   *     ([[IndexManifest.beginAppend]]) serve every append-only store.
+  *  4. COMMIT — one write order for every store: [[IndexManifest.rebuild]]
+  *     clears the old lineage's versions, runs the store's table writes
+  *     beside one corpus aggregate and flips the manifest last;
+  *     [[IndexManifest.append]] runs the prelude, the orphan guards, then
+  *     the writes, and flips last. A store states its tables and params;
+  *     the order lives here.
   *
   * The watermark pair (rows, maxId) is what the append-only corpus
   * contract makes sufficient: ids are stable and rows are never
@@ -58,27 +64,6 @@ object IndexManifest {
   def watermark(corpus: DataFrame, idCol: String): (Long, Long) = {
     val r = corpus.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
     (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-  }
-
-  /** Run independent store jobs CONCURRENTLY (guide §2.6 — overlap
-    * independent jobs: the driver otherwise serializes several
-    * sub-second jobs per store operation, and at bench scale the
-    * store-maintenance rows are job-latency-bound). Awaits EVERY job
-    * before propagating the first failure in sequence order, so no
-    * sibling is ever left in flight when a caller reacts to an error
-    * (the writeSpectralTables discipline). Callers put only
-    * ORDER-INDEPENDENT work here — guards that must precede a mutation
-    * stay sequential at the call site; the manifest flip always comes
-    * after.
-    */
-  def awaitAll(work: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val outcomes = work.map(w => Future(w()))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
   }
 
   /** Write `$path/MANIFEST.json` atomically (write-then-rename, same
@@ -202,8 +187,7 @@ object IndexManifest {
     * against `man`'s watermark — the contract that keeps the
     * (rows, max id) watermark an exact prefix witness. `man` is the
     * caller's [[require]] of its kind; store-specific checks that need
-    * no Spark job run between the two calls. Orphan guards and data
-    * writes stay with the store; the manifest flip comes last.
+    * no Spark job run between the two calls. [[append]] runs it first.
     */
   def beginAppend(increment: DataFrame, idCol: String, man: Manifest,
       path: String, extra: Column*): Increment = {
@@ -216,6 +200,60 @@ object IndexManifest {
           s"${man.corpusMaxId} ($path) — appends must be id-monotone")
     inc
   }
+
+  /** The REBUILD half of the commit protocol. A rebuild starts a new
+    * lineage, so the old lineage's versions are cleared BEFORE any
+    * overwrite: a crash in the window must not leave snapshots claiming
+    * watermarks the rewritten data no longer has (ADVICE r12). Then the
+    * store's table `writes` run concurrently with one corpus agg
+    * (count, max id, then the store's `extra` columns, as in
+    * [[beginAppend]]) — every crash state before the flip is an
+    * overwritten, unflipped store. `params` runs after all of them and
+    * before the flip: it returns the manifest params from the agg row,
+    * and a table derived from the agg (bm25's consts, the gram rows that
+    * carry the watermark) is written there.
+    * The manifest of `kind` flips LAST, as a new version when
+    * `versioned`. Returns the agg row.
+    */
+  def rebuild(path: String, kind: String, versioned: Boolean,
+      corpus: DataFrame, idCol: String, params: Row => Map[String, Long],
+      extra: Column*)(writes: (() => Unit)*): Row = {
+    clearVersions(path)
+    val (stats, _) = graft.Overlap(
+      corpus.agg(count(lit(1)), (max(col(idCol).cast("long")) +: extra): _*).head(),
+      graft.Overlap.all(writes))
+    flipAs(path, versioned, Manifest(kind, params(stats), stats.getLong(0),
+      if (stats.isNullAt(1)) -1L else stats.getLong(1)))
+    stats
+  }
+
+  /** The APPEND half of the commit protocol: the [[beginAppend]] prelude
+    * over `man` (an empty increment returns here, untouched), then the
+    * orphan guard ([[requireNoOrphans]]) on each `guards` table (table,
+    * id column), overlapped. `writes(inc)` is evaluated beside the
+    * guards, so it may read and compute (a codebook load, a checkpointed
+    * signature) but must not write: the thunks it returns run, overlapped,
+    * only after every guard passed. `params` runs after them and before
+    * the flip; the manifest, advanced over the increment with those
+    * params, flips LAST, as a new version when `versioned`.
+    */
+  def append(path: String, man: Manifest, versioned: Boolean,
+      increment: DataFrame, idCol: String, guards: Seq[(String, String)],
+      params: Increment => Map[String, Long], extra: Column*)(
+      writes: Increment => Seq[() => Unit]): Unit = {
+    val inc = beginAppend(increment, idCol, man, path, extra: _*)
+    if (inc.isEmpty) return
+    val spark = increment.sparkSession
+    val (_, work) = graft.Overlap(
+      graft.Overlap.all(guards.map { case (t, c) => () =>
+        requireNoOrphans(Tables.readParquet(spark, s"$path/$t"), c, man, path) }),
+      writes(inc))
+    graft.Overlap.all(work)
+    flipAs(path, versioned, inc.advanced.copy(params = params(inc)))
+  }
+
+  private def flipAs(path: String, versioned: Boolean, m: Manifest): Unit =
+    if (versioned) { writeVersioned(path, m); () } else write(path, m)
 
   /** The fresh/append/rebuild MAINTENANCE POLICY every watermark-synced
     * store shares (the e34 convention), as one operator callers run

@@ -238,11 +238,8 @@ object EventTimeOps {
     val m = IndexManifest.require(indexPath, "lsh")
     val (k, bands) = (m.params("k").toInt, m.params("bands").toInt)
     val hsig = Tables.readParquet(spark, s"$indexPath/sig").persist()
-    val hbands = Tables.readParquet(spark, s"$indexPath/bands")
-    val ok = hbands.groupBy(col("bno"), col("bkey"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
-      .select(col("bno"), col("bkey"))
-    val hb = hbands.join(ok, Seq("bno", "bkey")).persist()
+    val hb = Dedup.cappedBands(Tables.readParquet(spark, s"$indexPath/bands"),
+      maxBucket).persist()
     docs => docs.select(col("doc_id"))
       .join(Dedup.probeWithLshIndex(docs.select(col("doc_id"), col("text")),
         hsig, hb, k, bands, threshold), Seq("doc_id"), "left_outer")

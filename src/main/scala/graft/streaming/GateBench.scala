@@ -28,12 +28,15 @@ object GateBench {
   private val total = 20000
 
   /** What one run saw reach its sink, plus the gate's own readout
-    * (reservoir rows, cursor docs, card `n_docs`) where it has one. */
+    * (reservoir rows, cursor docs, card `n_docs`) and batch count (a
+    * gate without a sink) where it has one. */
   private final class Tally {
     val seen, kept, batches = new AtomicLong
     @volatile var readout: Option[() => Long] = None
+    @volatile var gateBatches: Option[() => Long] = None
     override def toString: String = s"seen=$seen kept=$kept batches=$batches" +
-      readout.fold("")(r => s" readout=${r()}")
+      readout.fold("")(r => s" readout=${r()}") +
+      gateBatches.fold("")(b => s" gate_batches=${b()}")
   }
 
   /** `total` rows fed to a fresh MemoryStream in `chunk`-row batches. */
@@ -172,8 +175,12 @@ object GateBench {
           val (w, h) = EventTimeOps.stratifiedReservoirIngest(
             s.withColumn("w", size(split($"text", " ")).cast("double")), "stratum", $"w", 16)
           t.readout = Some(() => h.sample.values.map(_.size).sum.toLong)
+          t.gateBatches = Some(() => h.batchesProcessed)
           w
-        }, t => want("reservoirs hold", t.readout.get(), 4 * 16)),
+        }, t => want("reservoirs hold", t.readout.get(), 4 * 16)
+          // the reservoirs fill in the first batch, so only the batch
+          // count shows a run that dropped later ones
+          .orElse(want("reservoir batches", t.gateBatches.get(), strata.batches))),
         Gate("bucket-batch", docs, { (s, t) =>
           val (w, h) = EventTimeOps.bucketBatchIngest(s, 16, 16)(drained(t))
           t.readout = Some(() => h.docsSeen.values.sum)
